@@ -1,6 +1,5 @@
 """PageRank (graph/algorithms.py): ranking correctness on a known
-topology, determinism across partitioning, and the lineage-truncating
-checkpoint path."""
+topology and determinism across partitioning."""
 
 import pyspark.sql.functions as F
 
@@ -25,14 +24,6 @@ def test_ranks_partition_invariant(spark):
     e = _star(spark)
     a = sorted(map(tuple, pagerank(e.repartition(1), n_iter=4).collect()))
     b = sorted(map(tuple, pagerank(e.repartition(13), n_iter=4).collect()))
-    assert a == b
-
-
-def test_checkpoint_path_same_result(spark):
-    e = _star(spark)
-    a = sorted(map(tuple, pagerank(e, n_iter=4).collect()))
-    b = sorted(map(tuple, pagerank(e, n_iter=4,
-                                   checkpoint_every=2).collect()))
     assert a == b
 
 

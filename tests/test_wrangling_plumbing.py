@@ -22,15 +22,24 @@ def test_infer_types(spark):
 
 def test_identify_entities_transitive(spark):
     from zef_spark.pipeline.wrangling import identify_entities
-    # r1~r2 share email; r2~r3 share phone → one entity {1,2,3}; r4 alone
+    # r1~r2 share email; r2~r3 share phone → one entity {1,2,3}; r4
+    # holds each of its keys alone; r5 has only null keys; r6 reaches
+    # r1 through its non-null phone; 20~12 (email) ~15 (phone) ~11
+    # (email) is a chain across both keys whose minimum is at one end
     df = spark.createDataFrame(
         [(1, "a@x.com", "111"), (2, "a@x.com", "222"),
-         (3, "b@y.com", "222"), (4, "c@z.com", "333")],
+         (3, "b@y.com", "222"), (4, "c@z.com", "333"),
+         (5, None, None), (6, None, "111"),
+         (20, "d@w.com", "444"), (12, "D@w.com ", "555"),
+         (15, "e@v.com", "555"), (11, "e@v.com", "666")],
         "rid int, email string, phone string")
     out = identify_entities(df, "rid", ["email", "phone"])
     comp = {r.rid: r.entity_id for r in out.collect()}
-    assert comp[1] == comp[2] == comp[3] == 1
+    assert comp[1] == comp[2] == comp[3] == comp[6] == 1
     assert comp[4] == 4
+    assert comp[5] == 5
+    assert comp[20] == comp[12] == comp[15] == comp[11] == 11
+    assert len(comp) == 10
 
 
 def test_merge_duplicates(spark):

@@ -18,15 +18,24 @@ in DuckDB).
 
 100 TB notes: the edge table never moves — only the rank vector
 (O(nodes)) shuffles per iteration; out-degrees are computed once.
-`checkpoint_every` truncates lineage with localCheckpoint the same way
-`NodeSet.gather` does (swap for checkpoint() on a real cluster).
 Dangling mass: simplified PageRank (rank = (1-d)/N + d·Σ in-contribs)
 — dangling-node mass decays rather than redistributes, the common
 choice for link-spam-robust relevance and the one that keeps the
 per-iteration plan a single aggregation (no extra global sum).
+
+Loop rule (here, ``NodeSet.gather`` and ``corpus.dup_clusters``): a
+loop that probes for convergence cuts each round's state with a lazy
+``localCheckpoint(eager=False)`` and calls ``count()`` on it or on a
+filter of it, so one action both materializes the round and decides
+whether to stop. The ``tol`` modes of pagerank/hits probe a one-row
+max-delta instead. Fixed-round loops keep their measured cuts:
+``hits`` every round, ``shortest_paths`` every 4, ``pagerank`` none.
+At cluster scale swap localCheckpoint for checkpoint() (reliable dir).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -46,7 +55,7 @@ def _dec12(col):
 
 def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
              n_iter: int = 3, damping: float = 0.85,
-             digits: int = 6, checkpoint_every: int = 0,
+             digits: int = 6,
              seed_pred=None, tol: float | None = None) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
     Returns (id, rank) for every node appearing as source or target;
@@ -116,13 +125,9 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
             "id", F.when(seed_pred,
                          F.lit(mass // ns).cast("long"))
             .otherwise(zero).alias("rank"))
-    if checkpoint_every:
-        e = e.localCheckpoint()
-        deg = deg.localCheckpoint()
-
     if tol is not None:
         ranks = ranks.localCheckpoint()
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contribs = (e.join(ranks.join(deg, "id"),
                            e.src == F.col("id"))
                     .select(F.col("dst").alias("id"),
@@ -148,8 +153,6 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                      .collect()[0]["d"])
             if delta is not None and delta < tol * mass:
                 break
-        elif checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
 
     # release: half-up to the digits grid IN INTEGER SPACE
     # ((r + shift/2) div shift), then one exact int->double cast and
@@ -322,39 +325,49 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
         F.count(F.lit(1)).alias("n_triangles"))
 
 
+def _bfs_frontiers(step: DataFrame, start: DataFrame,
+                    max_depth: int | None) -> list[DataFrame]:
+    """BFS frontiers over ``step`` (s, t) from ``start`` (id,):
+    element i holds the nodes first reached at depth i. Each round is
+    one frontier-edge join, an anti-join on the union of frontiers so
+    far and one action (the module's loop rule); ``max_depth=None`` is
+    unbounded. ``step`` is the caller's: dedupe or cut it if it pays."""
+    start = start.select("id").distinct().localCheckpoint(eager=False)
+    frontiers = [start]
+    visited = start
+    while max_depth is None or len(frontiers) <= max_depth:
+        new = (step.join(frontiers[-1].withColumnRenamed("id", "s"), "s")
+               .select(F.col("t").alias("id")).distinct()
+               .join(visited, "id", "left_anti")
+               .localCheckpoint(eager=False))
+        if new.count() == 0:
+            break
+        frontiers.append(new)
+        visited = visited.unionByName(new)
+    return frontiers
+
+
 def bfs_levels(edges: DataFrame, sources: DataFrame,
                src_col: str = "src", dst_col: str = "dst",
-               id_col: str = "id", max_depth: int = 20,
+               id_col: str = "id", max_depth: int | None = 20,
                directed: bool = True) -> DataFrame:
     """(id, level) breadth-first levels from a SET of source nodes
     (multi-source BFS — level = hop distance to the nearest source).
-    Bulk-synchronous frontier expansion: each round is one join of the
-    frontier (O(frontier) rows) against the static edge table plus an
-    anti-join on visited; rounds = eccentricity, lineage cut per round
-    with localCheckpoint. The driver holds only a one-row emptiness
-    probe per round. Nodes unreachable within ``max_depth`` are
-    absent from the result."""
+    Bulk-synchronous frontier expansion over the deduplicated edge
+    table (see _bfs_frontiers): rounds = eccentricity, one action
+    each, a one-row count on the driver. Nodes unreachable within
+    ``max_depth`` are absent; ``max_depth=None`` is unbounded."""
     e = edges.select(F.col(src_col).alias("s"),
                      F.col(dst_col).alias("t"))
     if not directed:
         e = e.unionAll(e.select(F.col("t").alias("s"),
                                 F.col("s").alias("t")))
-    e = e.distinct().localCheckpoint()
-    visited = (sources.select(F.col(id_col).alias("id")).distinct()
-               .withColumn("level", F.lit(0)).localCheckpoint())
-    frontier = visited.select("id")
-    for depth in range(1, max_depth + 1):
-        nxt = (frontier.join(e, frontier.id == e.s)
-               .select(F.col("t").alias("id")).distinct()
-               .join(visited, "id", "left_anti")
-               .localCheckpoint())
-        if not nxt.take(1):
-            break
-        visited = (visited.unionAll(
-            nxt.withColumn("level", F.lit(depth)))
-            .localCheckpoint())
-        frontier = nxt
-    return visited
+    e = e.distinct().localCheckpoint(eager=False)
+    frontiers = _bfs_frontiers(
+        e, sources.select(F.col(id_col).alias("id")), max_depth)
+    return reduce(lambda a, b: a.unionAll(b),
+                  [f.withColumn("level", F.lit(depth))
+                   for depth, f in enumerate(frontiers)])
 
 
 def clustering_coefficient(edges: DataFrame, src_col: str = "src",
@@ -428,15 +441,15 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
     """(id,) — the k-core: the maximal subgraph where every node has
     degree ≥ k (undirected view of the edge list). Iterative peeling:
     each round drops nodes below k and the edges touching them —
-    O(peel depth) rounds, each one degree aggregate + two semi-joins;
-    lineage cut per round. The driver sees only a one-row count per
+    O(peel depth) rounds, each one degree aggregate + two semi-joins
+    and one action (module loop rule); the driver sees one count per
     round. Standard community-density primitive (Seidman 1983)."""
     e = (edges.select(F.col(src_col).alias("a"),
                       F.col(dst_col).alias("b"))
          .where(F.col("a") != F.col("b")).distinct())
     sym = (e.unionByName(e.select(F.col("b").alias("a"),
                                   F.col("a").alias("b")))
-           .distinct().localCheckpoint())
+           .distinct().localCheckpoint(eager=False))
     # ONE count per round: carry the previous round's size forward
     # instead of re-counting the pre-peel table (r05 verdict §4)
     before = sym.count()
@@ -447,7 +460,7 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
                         "left_semi")
                .join(keep.select(F.col("id").alias("b")), "b",
                      "left_semi")
-               .localCheckpoint())
+               .localCheckpoint(eager=False))
         after = nxt.count()
         sym = nxt
         if after == before:
@@ -525,8 +538,7 @@ def hits(edges: DataFrame, src_col: str = "src",
         # instead of an eager job per vector per round (A/B: eager
         # checkpoints ran 86 jobs/run vs 40 before; lazy keeps the
         # bounded plan at the before job count). Values are untouched
-        # (pure materialization; guide §5, the pagerank
-        # checkpoint_every discipline).
+        # (pure materialization).
         h = h.localCheckpoint(eager=False)
         a = a.localCheckpoint(eager=False)
         if tol is not None:
@@ -636,7 +648,8 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
     replayable by n_rounds unrolled SQL joins — the oracle shape.
     Each round: one edge-keyed join + one (node, label) count agg +
     one per-node argmax window partitioned by node (same key — the
-    exchanges line up). Synchronous updates oscillate on bipartite
+    exchanges line up; labels are cut lazily, inside the next round's
+    action). Synchronous updates oscillate on bipartite
     structures — fixed rounds bound that by construction; pick odd/
     even rounds or a final components pass when stability matters."""
     e = (edges.select(F.col(src_col).alias("a"),
@@ -644,7 +657,7 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
          .where(F.col("a") != F.col("b")).distinct())
     sym = (e.unionByName(e.select(F.col("b").alias("a"),
                                   F.col("a").alias("b")))
-           .distinct().localCheckpoint())
+           .distinct().localCheckpoint(eager=False))
     labels = (sym.select(F.col("a").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     from pyspark.sql import Window
@@ -662,7 +675,7 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
                   .join(best, "id", "left")
                   .select("id", F.coalesce("label", F.col("id"))
                           .alias("label"))
-                  .localCheckpoint())
+                  .localCheckpoint(eager=False))
     return labels
 
 
@@ -736,7 +749,6 @@ def random_walk_cooccurrence(edges: DataFrame, src_col: str = "src",
             x, y = F.col(f"p{i}"), F.col(f"p{j}")
             pairs.append(frontier.select(
                 F.least(x, y).alias("a"), F.greatest(x, y).alias("b")))
-    from functools import reduce
     allp = reduce(lambda u, v: u.unionByName(v), pairs)
     return (allp.where(F.col("a") != F.col("b"))
             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("n")))

@@ -18,6 +18,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .algorithms import _bfs_frontiers
 from .schema import ID_KEY_BITS, VALUE_COLS, VALUE_COL_LIST
 
 
@@ -692,11 +693,10 @@ class NodeSet:
     def gather(self, rts=None, direction: str = "out",
                max_steps: int | None = None) -> "NodeSet":
         """Transitive closure along a rule set (ITF:9800 `gather`:
-        BFS with optional max_step). Iterative frontier joins; each
-        round materializes via localCheckpoint so lineage stays flat
-        (a 20-hop closure is 20 plain joins, not a 2^20-node plan).
-        At cluster scale swap localCheckpoint for checkpoint() on a
-        reliable checkpoint dir."""
+        BFS with optional max_step). The frontier loop is the one
+        ``bfs_levels`` runs (graph/algorithms.py): one action per round,
+        each round's frontier cut lazily so lineage stays flat (a
+        20-hop closure is 20 plain joins, not a 2^20-node plan)."""
         g, t = self.frame.graph, self.frame.tx
         e = _alive(g.edges, t)
         if rts is not None:
@@ -705,34 +705,14 @@ class NodeSet:
             e = e.where(F.col("rt").isin(names))
         hops = []
         if direction in ("out", "both"):
-            hops.append(e.select(F.col("src_id").alias("__a"),
-                                 F.col("dst_id").alias("__b")))
+            hops.append(e.select(F.col("src_id").alias("s"),
+                                 F.col("dst_id").alias("t")))
         if direction in ("in", "both"):
-            hops.append(e.select(F.col("dst_id").alias("__a"),
-                                 F.col("src_id").alias("__b")))
+            hops.append(e.select(F.col("dst_id").alias("s"),
+                                 F.col("src_id").alias("t")))
         step_df = reduce(lambda a, b: a.unionByName(b), hops)
-
-        # ONE job per BFS round: the frontier is checkpointed lazily and
-        # the convergence count materializes it (count, not take(1) —
-        # take escalates over near-empty frames and a lazy checkpoint
-        # needs a completion pass anyway). `visited` needs no checkpoint
-        # of its own: a union of checkpointed frontiers is already a
-        # flat O(rounds) plan.
-        visited = (self.df.select("id").distinct()
-                   .localCheckpoint(eager=False))
-        frontier = visited
-        steps = 0
-        while max_steps is None or steps < max_steps:
-            nxt = (step_df.join(frontier.withColumnRenamed("id", "__a"),
-                                "__a")
-                   .select(F.col("__b").alias("id")).distinct())
-            new = (nxt.join(visited, "id", "left_anti")
-                   .localCheckpoint(eager=False))
-            if new.count() == 0:
-                break
-            visited = visited.unionByName(new)
-            frontier = new
-            steps += 1
+        visited = reduce(lambda a, b: a.unionByName(b),
+                         _bfs_frontiers(step_df, self.df, max_steps))
         nodes = _alive(g.nodes, t)
         return NodeSet(self.frame, nodes.join(visited, "id", "left_semi"))
 

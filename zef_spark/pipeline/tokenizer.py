@@ -40,6 +40,9 @@ from .._registry import register_op
 #: end-of-word marker (standard BPE: keeps word-final pieces distinct)
 EOW = "</w>"
 
+#: learn_bpe cuts the symbol table's lineage every this many rounds
+_CHECKPOINT_EVERY = 8
+
 
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Distinct lowercase \\w+ words with corpus frequencies.
@@ -92,7 +95,6 @@ def select_batch(top: list[tuple[str, str, int]],
 
 
 def learn_bpe(df: DataFrame, text_col: str, n_merges: int = 50,
-              checkpoint_every: int = 8,
               batch_k: int = 1) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merge rules from the corpus. Returns the
     ordered merge list [(left_symbol, right_symbol), ...].
@@ -143,7 +145,7 @@ def learn_bpe(df: DataFrame, text_col: str, n_merges: int = 50,
         for a, b in batch:   # disjoint => one composed row-local pass
             syms = syms.select("freq", _merge_expr(a, b).alias("s"))
         rounds += 1
-        if rounds % checkpoint_every == 0:
+        if rounds % _CHECKPOINT_EVERY == 0:
             syms = syms.localCheckpoint()
     return merges
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from functools import reduce
 
 from .._registry import register_op
+from .corpus import dup_clusters
 
 _CASTS = [  # candidate target types, most specific first
     ("bigint", lambda c: c.try_cast("bigint")),
@@ -67,39 +68,25 @@ def identify_entities(df: DataFrame, id_col: str,
     """Entity resolution: rows sharing ANY normalized match-key value
     belong to one entity; emits a canonical ``out_col`` (min id of the
     connected component). identify_entities (data_wrangling.py:280)
-    re-expressed as iterative min-label propagation over the
-    record↔key bipartite graph — the standard alternating-groupBy
-    connected-components that scales linearly per round; rounds ≤
-    log(diameter), each round two shuffles."""
-    # record -> key nodes (normalized, null-safe)
-    pairs = None
-    for mc in match_cols:
-        p = (df.select(F.col(id_col).alias("__rid"),
-                       F.concat_ws("", F.lit(mc),
-                                   F.lower(F.trim(F.col(mc).cast("string"))))
-                       .alias("__key"))
-             .where(F.col(mc).isNotNull()))
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.localCheckpoint()
-
-    labels = pairs.select("__rid").distinct() \
-        .withColumn("__comp", F.col("__rid"))
-    for _ in range(max_iters):
-        # key label = min over its records; record label = min over keys
-        key_min = (pairs.join(labels, "__rid")
-                   .groupBy("__key").agg(F.min("__comp").alias("__kmin")))
-        new_labels = (pairs.join(key_min, "__key")
-                      .groupBy("__rid")
-                      .agg(F.min("__kmin").alias("__comp"))
-                      .localCheckpoint())
-        changed = (new_labels.join(labels.withColumnRenamed(
-            "__comp", "__old"), "__rid")
-            .where(F.col("__comp") != F.col("__old")).take(1))
-        labels = new_labels
-        if not changed:
-            break
-    return (df.join(labels.withColumnRenamed("__rid", id_col), id_col,
-                    "left")
+    re-expressed as connected components (corpus.dup_clusters, at most
+    ``max_iters`` rounds) over STAR edges: per key, every record
+    holding it links to the minimum record id holding it, which keeps
+    the record↔key bipartite graph's components. A record with no
+    non-null key, or alone on its keys, is its own entity."""
+    from pyspark.sql import Window
+    keys = reduce(lambda a, b: a.unionByName(b), [
+        df.select(F.col(id_col).alias("__rid"),
+                  F.concat_ws("", F.lit(mc),
+                              F.lower(F.trim(F.col(mc).cast("string"))))
+                  .alias("__key"))
+        .where(F.col(mc).isNotNull())
+        for mc in match_cols])
+    star = keys.select("__rid", F.min("__rid").over(
+        Window.partitionBy("__key")).alias("__root"))
+    comps = dup_clusters(star, "__rid", "__root", max_rounds=max_iters)
+    return (df.join(comps.select(F.col("id").alias(id_col),
+                                 F.col("cluster").alias("__comp")),
+                    id_col, "left")
             .withColumn(out_col, F.coalesce(F.col("__comp"),
                                             F.col(id_col)))
             .drop("__comp"))
