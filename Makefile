@@ -20,9 +20,13 @@ test:
 	python -m pytest tests/ -x -q
 
 # opt-in lane: the multi-minute e2e/property tests (3-process pub/sub,
-# codec fuzz, hypothesis temporal model, streaming replays)
+# codec fuzz, hypothesis temporal model, streaming replays); writes a
+# junit summary to SLOW_LANE.xml. Narrow it with SLOW_TESTS, e.g.
+# make test-slow SLOW_TESTS="tests/test_graph_sync.py tests/test_streaming.py"
+SLOW_TESTS ?= tests/
 test-slow:
-	python -m pytest tests/ -x -q -m slow --override-ini addopts=
+	python -m pytest $(SLOW_TESTS) -x -q -m slow --override-ini addopts= \
+	  --junitxml=SLOW_LANE.xml
 
 # both lanes, one command (the pre-round-end full gate)
 test-all:

@@ -19,22 +19,29 @@ multi-table commit (MERGE for supersede/terminate).
 
 from __future__ import annotations
 
+import datetime
 import itertools
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql import functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from ..tokens import Token
 from .graph import Graph
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TXS_SCHEMA, VALUE_COLS, VALUE_COL_LIST)
 
+# (owner, field) pairs an Assign / SetField / Merge could supersede
+_PAIRS_SCHEMA = T.StructType([T.StructField("src_id", T.LongType()),
+                              T.StructField("rt", T.StringType())])
+
 _PY_VRT = [(bool, "Bool"), (int, "Int"), (float, "Float"), (str, "String")]
 
 
 def _vrt_of(value) -> str:
-    import datetime
     from ..tokens import EnumValue
     from ..units import QuantityFloat, QuantityInt
     from ..user_value_type import UserValueInstance
@@ -141,29 +148,44 @@ class Untag:  # close the tag's validity interval (ITF:7406)
 
 
 def _local_df(spark, rows, schema):
-    """createDataFrame with partitions scaled to the row count: a
-    wish list of a few hundred rows must not shard into
-    defaultParallelism (32+) near-empty partitions — every downstream
-    point lookup would pay one task launch PER partition. One
-    partition per 50k rows, capped at the session parallelism."""
+    """Driver-built rows (tuples in ``schema`` order) as a DataFrame.
+
+    The rows go to the JVM as one Arrow table, which below
+    ``spark.sql.execution.arrow.localRelationThreshold`` plans as a
+    ``LocalRelation``: no Python worker runs when it is read, Catalyst
+    folds filters over it at plan time, and an empty one drops out of
+    every union built on it. Rows are checked against the schema here,
+    so a null in a non-nullable column or a cell of the wrong type
+    raises now, not at the first read. Cells go through the schema's
+    own ``toInternal``, as ``createDataFrame`` does, so an aware
+    datetime in an NTZ column keeps its wall-clock time (pyarrow would
+    shift it to UTC). One partition per 50k rows, capped at the
+    session parallelism: a few hundred wish rows must not shard into
+    one near-empty partition per core, each a task launch for every
+    later point lookup."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(schema)
+    cols = (list(zip(*map(schema.toInternal, rows))) if rows
+            else [()] * len(arrow))
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
     n = max(1, min(spark.sparkContext.defaultParallelism,
                    len(rows) // 50_000 + 1))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n), schema)
+    return spark.createDataFrame(table, schema).coalesce(n)
 
 
 def empty_graph(spark) -> Graph:
-    # _local_df (1 partition) instead of bare createDataFrame: an empty
-    # createDataFrame shards into defaultParallelism (32+) empty
-    # partitions, and EVERY job over a transact chain built on top pays
-    # one task launch per empty partition per stage (measured r13:
-    # g_relation_fields_meta ran 45 jobs x 33 tasks over a 30-row graph).
+    # local relations: the three empty tables drop out of every union a
+    # transact chain builds on them, and the one-row tx table is a
+    # single partition
     g = Graph(
         _local_df(spark, [], NODES_SCHEMA),
         _local_df(spark, [], EDGES_SCHEMA),
         _local_df(spark, [], ATTR_VALUES_SCHEMA),
-        _local_df(spark, [(0, __import__("datetime")
-                           .datetime(1970, 1, 1))], TXS_SCHEMA))
+        _local_df(spark, [(0, datetime.datetime(1970, 1, 1))], TXS_SCHEMA))
     g.interactive = True
     # the graph is empty by construction: seed the tx / id high-water
     # marks so the first transact and now() run ZERO scan jobs
@@ -181,7 +203,6 @@ def transact(g: Graph, wishes: list, time=None,
     any callable(wishes, g)) runs first and a violation aborts the
     whole tx (reference FinishTransaction check_schema,
     core/src/transaction.cpp:158-183)."""
-    import datetime
     spark = g.spark
     if check_schema:
         validator = getattr(g, "schema_validator", None)
@@ -251,8 +272,7 @@ def transact(g: Graph, wishes: list, time=None,
                   for f in w.fields}
     ae_cache: dict[tuple[int, str], int] = {}
     if pre_pairs:
-        pairs_df = spark.createDataFrame(
-            [(o, f) for o, f in pre_pairs], "src_id long, rt string")
+        pairs_df = _local_df(spark, list(pre_pairs), _PAIRS_SCHEMA)
         hits = (g.edges.where(F.col("valid_to_tx").isNull())
                 .join(F.broadcast(pairs_df), ["src_id", "rt"], "inner")
                 .select("src_id", "rt", "dst_id").collect())

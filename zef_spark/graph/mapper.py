@@ -21,13 +21,15 @@ Graph costs nothing until a query runs. For repeated heavy use,
 
 from __future__ import annotations
 
+import datetime
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .delta import _local_df
 from .graph import Graph
-from .schema import ID_KEY_BITS
+from .schema import ID_KEY_BITS, TXS_SCHEMA
 
 _EPOCH = "1992-01-01"
 
@@ -213,9 +215,8 @@ def build_graph(spark: SparkSession, sf_dir: str) -> Graph:
                                .alias("time")),
     ]
     txs = _union_all(tx_parts).dropDuplicates(["tx_id"]).unionByName(
-        spark.createDataFrame(
-            [(1,)], "tx_id long").select(
-            "tx_id", F.lit(_EPOCH).cast("timestamp_ntz").alias("time")))
+        _local_df(spark, [(1, datetime.datetime.fromisoformat(_EPOCH))],
+                  TXS_SCHEMA))
 
     g = Graph(_union_all(node_parts), _union_all(edge_parts),
               _union_all(attr_parts), txs)

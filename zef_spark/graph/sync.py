@@ -62,6 +62,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from .delta import _local_df, transact
 from .graph import Graph
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TAGS_SCHEMA, TXS_SCHEMA)
@@ -347,7 +348,7 @@ class GraphStore:
         tags = g.tags
         if tg_new or tg_cl:
             if tags is None:
-                tags = spark.createDataFrame([], TAGS_SCHEMA)
+                tags = _local_df(spark, [], TAGS_SCHEMA)
             tags = apply(tags, ["name", "valid_from_tx"],
                          "valid_to_tx", tg_new, tg_cl)
         out = Graph(nodes, edges, avs, txs, tags)
@@ -365,7 +366,6 @@ class GraphStore:
         against a refreshed head when another process claims the tx
         number first (the atomic-rename race). Returns (head graph
         after commit, receipt)."""
-        from .delta import transact
         last_err = None
         for _ in range(max_retries):
             g = self.refresh()
@@ -413,11 +413,10 @@ class GraphStore:
             # the checkpoint claims tx; it carries no delta rows, but
             # max_tx must stay monotonic — record an empty tx row
             import datetime
-            self.spark.createDataFrame(
-                [(tx, datetime.datetime(2000, 1, 1)
-                  + datetime.timedelta(days=tx))], TXS_SCHEMA) \
-                .coalesce(1).write.mode("overwrite") \
-                .parquet(os.path.join(tmp, "txs"))
+            _local_df(self.spark, [(tx, datetime.datetime(2000, 1, 1)
+                                    + datetime.timedelta(days=tx))],
+                      TXS_SCHEMA) \
+                .write.mode("overwrite").parquet(os.path.join(tmp, "txs"))
             if not self.protocol.claim(self.path, tx, tmp):
                 import shutil
                 self.protocol.discard(self.path, tx, tmp)
@@ -466,9 +465,8 @@ class GraphStore:
                 wr(edge_parts, "edges")
             if av_parts:
                 wr(av_parts, "attr_values")
-            self.spark.createDataFrame([(tx, time)], TXS_SCHEMA) \
-                .coalesce(1).write.mode("overwrite") \
-                .parquet(os.path.join(tmp, "txs"))
+            _local_df(self.spark, [(tx, time)], TXS_SCHEMA) \
+                .write.mode("overwrite").parquet(os.path.join(tmp, "txs"))
             # record the mapping's band bound: wish commits in ANY
             # process (now or after restart) must mint above it, or a
             # wish id equals the arithmetic id this mapping mints for

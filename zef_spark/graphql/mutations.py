@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..graph.delta import _local_df
 from .compiler import FilterCompiler
 from .schema import GqlSchema
 
@@ -152,8 +153,8 @@ class MutationExecutor:
                 for item in inputs]
         given = list(dict.fromkeys(c for r in rows for c in r))
         rows = [{c: r.get(c) for c in given} for r in rows]
-        new = cur.sparkSession.createDataFrame(
-            rows, schema=cur.select(*given).schema)
+        new = _local_df(cur.sparkSession, [tuple(r.values()) for r in rows],
+                        cur.select(*given).schema)
         missing = [c for c in cur.columns if c not in new.columns]
         new = new.select("*", *[F.lit(None).cast(dict(cur.dtypes)[c])
                                 .alias(c) for c in missing])
@@ -191,8 +192,8 @@ class MutationExecutor:
                 f"every upfetch{tname} input needs {t.upfetch_field!r}")
         given = list(dict.fromkeys(c for r in rows for c in r))
         rows = [{c: r.get(c) for c in given} for r in rows]
-        upd = cur.sparkSession.createDataFrame(
-            rows, schema=cur.select(*given).schema)
+        upd = _local_df(cur.sparkSession, [tuple(r.values()) for r in rows],
+                        cur.select(*given).schema)
         marked = upd.select(
             F.col(key),
             *[F.col(c).alias(f"__up_{c}") for c in given if c != key],

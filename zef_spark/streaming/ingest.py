@@ -204,7 +204,10 @@ class MappedStreamTransactor:
     as DataFrame selects — no driver-side row materialization (the
     wish-based StreamTransactor funnels every row through
     ``batch_df.collect()``; at a high-volume stream that driver hop is
-    the bottleneck, so it is reserved for control-plane volumes).
+    the bottleneck, so it is reserved for control-plane volumes). Only
+    the ledger and tx rows are built on the driver, as local relations
+    (``graph.delta._local_df``), so reading the graph back runs no
+    Python worker for any batch.
 
     Exactly-once like StreamTransactor: the applied-batch ledger rides
     on the graph as a ZefSparkStreamBatch entity whose node/AE/edge/
@@ -250,8 +253,8 @@ class MappedStreamTransactor:
         node_parts, edge_parts, av_parts = mapped_parts(
             batch_df, m, tx, batch_label=str(batch_id))
 
-        # ledger rows (driver-side, 3+1 rows — control-plane volume):
-        # entity + batch_key AE + attr edge + value row, all at tx
+        # ledger rows, built on the driver as local relations: entity
+        # + batch_key AE + attr edge + value row, all at tx
         cached = getattr(g, "_max_rae_id", None)
         if cached is None:
             cached = max(
