@@ -1,8 +1,18 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests sit in: its engine is the one under test
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
+
+
+@pytest.fixture(scope="session")
+def repo_root():
+    """Root of the checkout under test, for scripts run in a
+    subprocess."""
+    return REPO
 
 
 @pytest.fixture(scope="session")

@@ -108,7 +108,7 @@ def test_compact_checkpoint(spark, tmp_path):
     assert GraphSlice(gb, 2).all(ET.Person).df.count() == 2
 
 
-def test_true_multiprocess_sync(spark, tmp_path):
+def test_true_multiprocess_sync(spark, tmp_path, repo_root):
     """A REAL second process (own JVM/SparkSession) commits to the
     shared store; this process sees it after refresh — the reference's
     robot scenario (N processes, one graph) minus the broker."""
@@ -117,7 +117,7 @@ def test_true_multiprocess_sync(spark, tmp_path):
     a = _store(spark, tmp_path)
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo_root!r})
 from zef_spark import ET, get_spark
 from zef_spark.graph.delta import E
 from zef_spark.graph.sync import GraphStore

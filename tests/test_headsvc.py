@@ -138,7 +138,8 @@ def test_compact_ships_checkpoint_base(spark, tmp_path, head):
     assert c.head().now().all(ET.Person).df.count() == 3
 
 
-def test_true_second_process_shares_only_url(spark, tmp_path, head):
+def test_true_second_process_shares_only_url(spark, tmp_path, head,
+                                              repo_root):
     """The robot-scenario analogue: a REAL second process (own JVM,
     own private cache dir) attaches by URL, commits, and this process
     sees the commit — the filesystem is never shared."""
@@ -148,7 +149,7 @@ def test_true_second_process_shares_only_url(spark, tmp_path, head):
     a = _publish(spark, url, tmp_path)
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo_root!r})
 from zef_spark import ET, get_spark
 from zef_spark.graph.delta import E
 from zef_spark.graph.headsvc import RemoteGraphStore

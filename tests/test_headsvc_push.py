@@ -132,7 +132,8 @@ def test_subscribe_on_event_filtered(spark, tmp_path, head):
         sub.stop(timeout=1.0)
 
 
-def test_push_from_true_second_process(spark, tmp_path, head):
+def test_push_from_true_second_process(spark, tmp_path, head,
+                                       repo_root):
     """The verdict's Done-bound: a remote commit from a REAL second
     process (own JVM, own cache, shares only the URL) triggers this
     process's subscriber callback within the poll-free latency
@@ -156,7 +157,7 @@ def test_push_from_true_second_process(spark, tmp_path, head):
     sub = b.subscribe(cb, poll_timeout=300.0)
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo_root!r})
 from zef_spark import ET, get_spark
 from zef_spark.graph.delta import E
 from zef_spark.graph.headsvc import RemoteGraphStore
@@ -187,7 +188,7 @@ print("COMMITTED_AT", time.time())
 
 
 def test_graphql_subscription_push_cross_process(spark, tmp_path,
-                                                 head):
+                                                 head, repo_root):
     """r10 VERDICT order #6 e2e — the composed halves: a graph
     commit in a TRUE second process → head-service /watch wake →
     THIS process's remote-bridge publish → an SSE
@@ -259,7 +260,7 @@ type Person @table(name: "events", id: "id") {
 
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo_root!r})
 from zef_spark import ET, get_spark
 from zef_spark.graph.delta import E
 from zef_spark.graph.headsvc import RemoteGraphStore

@@ -22,11 +22,11 @@ global_row_number / global_cumsums), not allowlisted.
 import pytest
 pytestmark = pytest.mark.slow
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,16 +1,24 @@
-"""Job counts of the iterative graph loops on an 8-node chain.
+"""Job counts of the iterative graph loops on an 8-node chain, and of a
+GraphStore commit and compaction.
 
 Each loop cuts a round's state with a lazy localCheckpoint and probes
 it with one count() (graph/algorithms.py module docstring), so a round
 costs one action. The bounds are the counts measured with that rule
 (the same at local[2], local[4] and local[8]); an eager cut or a second
 probe per round exceeds them.
+
+A commit writes the rows ``transact`` built on the driver, so its only
+jobs are transact's field lookup and the one query for the keys of the
+stored rows it closes.
 """
 
 import pytest
 
+from zef_spark import ET, RT
 from zef_spark.graph.algorithms import bfs_levels, k_core, \
     label_propagation
+from zef_spark.graph.delta import Assign, E, R, empty_graph, transact
+from zef_spark.graph.sync import GraphStore
 from zef_spark.pipeline.wrangling import identify_entities
 
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
@@ -73,3 +81,32 @@ def test_label_propagation_jobs(spark, chain):
                     "loop-jobs-lp")
     assert len(rows) == 8
     assert n <= 22
+
+
+@pytest.fixture
+def store(spark, tmp_path):
+    g, receipt = transact(empty_graph(spark), [
+        E(ET.Person, f"s{i}", fields={"score": i}) for i in range(20)])
+    return (GraphStore.init(g, str(tmp_path / "store")),
+            [receipt[f"s{i}"] for i in range(20)])
+
+
+def test_store_commit_jobs(spark, store):
+    # the benchmark's commit: 20 new entities with a field, 10 field
+    # assignments to stored entities, 5 relations
+    st, ids = store
+    wishes = [E(ET.Person, f"n{i}", fields={"score": i}) for i in range(20)]
+    wishes += [Assign(t, "score", -1) for t in ids[:10]]
+    wishes += [R(f"n{i}", RT.Knows, f"n{i + 1}") for i in range(5)]
+    n, (head, _) = _jobs(spark, lambda: st.commit(wishes),
+                         "store-jobs-commit")
+    assert head.max_tx() == 2
+    assert n <= 3
+
+
+def test_store_compact_jobs(spark, store):
+    st, ids = store
+    st.commit([Assign(ids[0], "score", -1)])
+    n, head = _jobs(spark, st.compact, "store-jobs-compact")
+    assert head.max_tx() == 3
+    assert n <= 7

@@ -53,8 +53,6 @@ FORBIDDEN = ("BroadcastNestedLoopJoin", "CartesianProduct")
 
 @pytest.fixture(scope="module")
 def entry():
-    import sys
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
     return e
 

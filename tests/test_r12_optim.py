@@ -4,11 +4,7 @@ per-range collect), the single-pass bm25, and spread_scan — each
 optimization must be value-identical to the straightforward
 (single-partition-window / multi-scan) spelling."""
 
-import sys
-
 from pyspark.sql import Window, functions as F
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_range_offsets_matches_keyless_cumsum(spark):

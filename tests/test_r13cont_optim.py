@@ -2,12 +2,8 @@
 VRT registry, 1-partition driver-graph frames, one-job-per-round
 dup_clusters/gather convergence, HOF expression materialization."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-import pytest  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+import pytest
+from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")

@@ -5,11 +5,8 @@ r07 FP-fragile shapes while passing grid-artifact reprs, raw doubles,
 and ≤9-total-digit outputs."""
 
 import math
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 VALUES = [
     0.0, 1.0, -1.0,

@@ -63,7 +63,7 @@ def _reader(proc, sink, tag):
         sink.append((tag, line.strip()))
 
 
-def test_two_subscribers_one_mutator(spark, tmp_path):
+def test_two_subscribers_one_mutator(spark, tmp_path, repo_root):
     srv, url, _store = serve()
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
@@ -77,7 +77,7 @@ def test_two_subscribers_one_mutator(spark, tmp_path):
         for i in (1, 2):
             p = subprocess.Popen(
                 [sys.executable, "-c", SUBSCRIBER.format(
-                    repo="/root/repo", app=f"zef_robot_sub{i}",
+                    repo=repo_root, app=f"zef_robot_sub{i}",
                     url=url, cache=str(tmp_path / f"cache_s{i}"))],
                 stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                 text=True)
@@ -99,7 +99,7 @@ def test_two_subscribers_one_mutator(spark, tmp_path):
 
         mut = subprocess.run(
             [sys.executable, "-c", MUTATOR.format(
-                repo="/root/repo", url=url,
+                repo=repo_root, url=url,
                 cache=str(tmp_path / "cache_m"))],
             capture_output=True, text=True, timeout=300)
         assert "COMMITTED_AT" in mut.stdout, mut.stderr[-2000:]

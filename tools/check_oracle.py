@@ -7,9 +7,11 @@ values. Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -71,7 +73,6 @@ def duck_run(sf_dir: str, sql: str):
 # row (r06 Decimal rendering, r07 e_linreg_trend / w_dp_priority_stats
 # FP fragility). Strict mode is the DEFAULT; set CHECK_LENIENT=1 only
 # to triage how far apart a red row is.
-import os
 STRICT_REPR = os.environ.get("CHECK_LENIENT", "") != "1"
 
 

@@ -6,9 +6,11 @@ driver's stricter value-hash. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracle import TABLES, duck_run  # noqa: E402
 

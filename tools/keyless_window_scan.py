@@ -12,9 +12,11 @@ is empty. Usage: python tools/keyless_window_scan.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def keyless_window_specs(plan_text: str) -> list[str]:

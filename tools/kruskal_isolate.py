@@ -23,7 +23,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():

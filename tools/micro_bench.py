@@ -19,10 +19,12 @@ Prints one JSON line {"n", "mode", "make_s", "find_s"}.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():

@@ -35,7 +35,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 MINHASH_STRATUM_CTE = """
 sh AS (

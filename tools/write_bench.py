@@ -30,7 +30,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _host():

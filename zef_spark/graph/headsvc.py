@@ -190,6 +190,13 @@ class _Handler(BaseHTTPRequestHandler):
         self._send(404)
 
 
+class _Server(ThreadingHTTPServer):
+    # socketserver listens with a backlog of 5; a few writers, each
+    # uploading a segment on _parallel's 8 threads, overflow it and
+    # their connects are reset
+    request_queue_size = 128
+
+
 def serve(host: str = "127.0.0.1", port: int = 0,
           eventual: bool = False):
     """Start a head service; returns (server, url, store). Run the
@@ -197,7 +204,7 @@ def serve(host: str = "127.0.0.1", port: int = 0,
     daemon=True).start()`` and stop it with ``server.shutdown()``."""
     store = _Store(eventual=eventual)
     handler = type("Handler", (_Handler,), {"store": store})
-    srv = ThreadingHTTPServer((host, port), handler)
+    srv = _Server((host, port), handler)
     url = f"http://{srv.server_address[0]}:{srv.server_address[1]}"
     return srv, url, store
 

@@ -12,9 +12,12 @@ shared storage (the shape Delta Lake's transaction log made standard):
   (token-partitioned parquet — Graph.materialize) plus an empty
   ``txlog/`` directory.
 - ``store.commit(wishes)`` runs the normal wish ``transact`` against
-  the current head, extracts the tx's DELTA (new interval rows + the
-  closures it stamped on existing rows), writes it to a temp segment
-  dir, and claims the tx number with ONE atomic ``os.rename`` to
+  the current head, which also returns the tx's DELTA: the interval
+  rows it built on the driver and the ids of the stored rows it
+  closed. The closed rows' keys come from one query over the head
+  (none when the tx closes nothing stored); each non-empty table is
+  written on the driver as one parquet file in a temp segment dir,
+  and the tx number is claimed with ONE atomic ``os.rename`` to
   ``txlog/<tx>``. If another process claimed that tx first the rename
   fails, the local tx is discarded and the commit retries against the
   refreshed head — optimistic concurrency, last-committer-retries.
@@ -56,18 +59,104 @@ migrate postures mid-history.
 
 from __future__ import annotations
 
+import datetime
+import functools
 import json
 import os
 import uuid
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from .delta import _local_df, transact
+from .delta import TxDelta, _arrow_table, _local_df, _transact
 from .graph import Graph
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TAGS_SCHEMA, TXS_SCHEMA)
 
 _SEG_FMT = "{:012d}"
+
+
+def _close_schema(key: str, key_type, from_col: str) -> T.StructType:
+    return T.StructType([T.StructField(key, key_type),
+                         T.StructField(from_col, T.LongType()),
+                         T.StructField("__closed_at", T.LongType())])
+
+
+# segment table -> schema of its rows; a closure row is (key, from-tx,
+# closing tx) of a row stored before the tx
+_SEG_SCHEMAS = {
+    "nodes": NODES_SCHEMA, "edges": EDGES_SCHEMA,
+    "attr_values": ATTR_VALUES_SCHEMA, "txs": TXS_SCHEMA,
+    "tags": TAGS_SCHEMA,
+    "node_closures": _close_schema("id", T.LongType(), "valid_from_tx"),
+    "edge_closures": _close_schema("id", T.LongType(), "valid_from_tx"),
+    "av_closures": _close_schema("ae_id", T.LongType(), "assigned_at_tx"),
+    "tag_closures": _close_schema("name", T.StringType(),
+                                  "valid_from_tx"),
+}
+
+
+def _write_table(seg: str, name: str, rows: list) -> None:
+    """Rows of segment table ``name`` as ONE parquet file written on
+    the driver; an empty table writes nothing. Readers pass the schema,
+    so the file carries no Arrow schema of its own."""
+    if not rows:
+        return
+    os.makedirs(os.path.join(seg, name), exist_ok=True)
+    pq.write_table(_arrow_table(rows, _SEG_SCHEMAS[name]),
+                   os.path.join(seg, name, "part-00000.parquet"),
+                   store_schema=False)
+
+
+def _tx_row(tx: int) -> tuple:
+    return (tx, datetime.datetime(2000, 1, 1) + datetime.timedelta(days=tx))
+
+
+def _closures(before: Graph, d: TxDelta) -> dict[str, list]:
+    """Closure rows of the stored rows tx ``d.tx`` closes, per closure
+    table. Their keys come from ONE query over ``before``, restricted to
+    the closed ids; a tx that closes no stored row runs none."""
+    minted = {r[0] for r in d.nodes} | {r[0] for r in d.edges}
+    ended = d.terminated - minted
+    parts: list[DataFrame] = []
+
+    def keys(name, df, key, from_col, close_col, among):
+        # ids and tag names share one string column, so every part
+        # unions into the single query
+        k = F.col(key)
+        parts.append(df.where(k.isin(among) & F.col(close_col).isNull())
+                     .select(F.lit(name).alias("t"),
+                             k.cast("string").alias("k"), from_col))
+
+    if ended:
+        keys("node_closures", before.nodes, "id", "valid_from_tx",
+             "valid_to_tx", ended)
+        keys("edge_closures", before.edges, "id", "valid_from_tx",
+             "valid_to_tx", ended)
+    if d.closed_aes:
+        keys("av_closures", before.attr_values, "ae_id", "assigned_at_tx",
+             "superseded_at_tx", d.closed_aes)
+    if d.closed_tags and before.tags is not None:
+        keys("tag_closures", before.tags, "name", "valid_from_tx",
+             "valid_to_tx", d.closed_tags)
+    out: dict[str, list] = {}
+    if parts:
+        for t, k, frm in functools.reduce(DataFrame.union,
+                                          parts).collect():
+            out.setdefault(t, []).append(
+                (k if t == "tag_closures" else int(k), frm, d.tx))
+    return out
+
+
+def _write_delta(seg: str, before: Graph, d: TxDelta) -> None:
+    """Segment of tx ``d.tx``: its new rows and the closures it stamps
+    on rows stored in ``before``."""
+    os.makedirs(seg, exist_ok=True)
+    tables = {"nodes": d.nodes, "edges": d.edges,
+              "attr_values": d.attr_values, "txs": d.txs, "tags": d.tags,
+              **_closures(before, d)}
+    for name, rows in tables.items():
+        _write_table(seg, name, rows)
 
 
 class RenameCommitProtocol:
@@ -369,10 +458,10 @@ class GraphStore:
         last_err = None
         for _ in range(max_retries):
             g = self.refresh()
-            tx = g.max_tx() + 1
-            g2, receipt = transact(g, wishes, time)
+            g2, receipt, delta = _transact(g, wishes, time, False)
+            tx = delta.tx
             tmp = self.protocol.temp_segment(self.path)
-            self._write_segment(g, g2, tx, tmp)
+            _write_delta(tmp, g, delta)
             with open(os.path.join(tmp, "idmax.json"), "w") as f:
                 json.dump({"idmax": g2._max_rae_id or 0}, f)
             if not self.protocol.claim(self.path, tx, tmp):
@@ -412,11 +501,7 @@ class GraphStore:
                 json.dump({"idmax": g._max_rae_id or 0}, f)
             # the checkpoint claims tx; it carries no delta rows, but
             # max_tx must stay monotonic — record an empty tx row
-            import datetime
-            _local_df(self.spark, [(tx, datetime.datetime(2000, 1, 1)
-                                    + datetime.timedelta(days=tx))],
-                      TXS_SCHEMA) \
-                .write.mode("overwrite").parquet(os.path.join(tmp, "txs"))
+            _write_table(tmp, "txs", [_tx_row(tx)])
             if not self.protocol.claim(self.path, tx, tmp):
                 import shutil
                 self.protocol.discard(self.path, tx, tmp)
@@ -440,14 +525,10 @@ class GraphStore:
         stay the control plane. On a lost claim race the segment is
         rewritten against the refreshed head's tx (the mapping's ids
         are tx-independent, so retry is cheap and safe)."""
-        import datetime
-        import shutil
         from ..streaming.ingest import mapped_parts
         for _ in range(max_retries):
             g = self.refresh()
             tx = g.max_tx() + 1
-            time = (datetime.datetime(2000, 1, 1)
-                    + datetime.timedelta(days=tx))
             node_parts, edge_parts, av_parts = mapped_parts(
                 batch_df, mapping, tx, batch_label=f"tx {tx}")
             tmp = self.protocol.temp_segment(self.path)
@@ -465,8 +546,7 @@ class GraphStore:
                 wr(edge_parts, "edges")
             if av_parts:
                 wr(av_parts, "attr_values")
-            _local_df(self.spark, [(tx, time)], TXS_SCHEMA) \
-                .write.mode("overwrite").parquet(os.path.join(tmp, "txs"))
+            _write_table(tmp, "txs", [_tx_row(tx)])
             # record the mapping's band bound: wish commits in ANY
             # process (now or after restart) must mint above it, or a
             # wish id equals the arithmetic id this mapping mints for
@@ -521,48 +601,3 @@ class GraphStore:
             removed.append(p)
         self._head = None
         return removed
-
-    def _write_segment(self, before: Graph, after: Graph, tx: int,
-                       seg: str) -> None:
-        """Extract tx's delta from the before/after pair. All four
-        extracts filter on the tx literal, so they only materialize
-        wish-sized row sets; writes are single-file parquet."""
-        os.makedirs(seg, exist_ok=True)
-
-        def w(df, name):
-            rows = df.limit(1).collect()
-            if not rows:
-                return
-            df.coalesce(1).write.mode("overwrite") \
-                .parquet(os.path.join(seg, name))
-
-        w(after.nodes.where(F.col("valid_from_tx") == tx), "nodes")
-        w(after.edges.where(F.col("valid_from_tx") == tx), "edges")
-        w(after.attr_values.where(F.col("assigned_at_tx") == tx),
-          "attr_values")
-        w(after.txs.where(F.col("tx_id") == tx), "txs")
-        # closures: rows that existed BEFORE tx and were closed AT tx
-        w(after.nodes.where((F.col("valid_to_tx") == tx)
-                            & (F.col("valid_from_tx") < tx))
-          .select("id", "valid_from_tx",
-                  F.lit(tx).cast("long").alias("__closed_at")),
-          "node_closures")
-        w(after.edges.where((F.col("valid_to_tx") == tx)
-                            & (F.col("valid_from_tx") < tx))
-          .select("id", "valid_from_tx",
-                  F.lit(tx).cast("long").alias("__closed_at")),
-          "edge_closures")
-        w(after.attr_values.where((F.col("superseded_at_tx") == tx)
-                                  & (F.col("assigned_at_tx") < tx))
-          .select("ae_id", "assigned_at_tx",
-                  F.lit(tx).cast("long").alias("__closed_at")),
-          "av_closures")
-        # tag deltas: temporal names follow the same interval model
-        # as RAEs (Tag opens, Untag/re-Tag closes at tx)
-        if after.tags is not None:
-            w(after.tags.where(F.col("valid_from_tx") == tx), "tags")
-            w(after.tags.where((F.col("valid_to_tx") == tx)
-                               & (F.col("valid_from_tx") < tx))
-              .select("name", "valid_from_tx",
-                      F.lit(tx).cast("long").alias("__closed_at")),
-              "tag_closures")

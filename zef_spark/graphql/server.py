@@ -154,6 +154,10 @@ class AuthedEngine:
 
 # -- HTTP server ------------------------------------------------------
 
+# largest POST body the server reads; a longer Content-Length gets 413
+MAX_REQUEST_BYTES = 1 << 20
+
+
 def make_server(engine, auth: AuthConfig | None = None,
                 host: str = "127.0.0.1", port: int = 0,
                 max_streams: int = 64,
@@ -292,6 +296,12 @@ def make_server(engine, auth: AuthConfig | None = None,
                 return
             try:
                 n = int(self.headers.get("Content-Length", 0))
+                if n < 0:               # rfile.read(-1) waits for EOF
+                    raise ValueError(n)
+                if n > MAX_REQUEST_BYTES:
+                    self._send(413, {"errors": [
+                        {"message": "request body too large"}]})
+                    return
                 req = json.loads(self.rfile.read(n) or b"{}")
             except (ValueError, json.JSONDecodeError):
                 self._send(400, {"errors": [{"message": "bad request"}]})
