@@ -411,6 +411,7 @@ def test_field_read_arithmetic_owner_fast_path(spark):
     ae_id (shared key bits) — the field-read plan must contain ONE
     join (values x node set) and no edge-table access; results equal
     the general edge-join path."""
+    from dataclasses import replace
     from zef_spark import ET, ops as z
     from zef_spark.graph.mapper import graph_for
     g = graph_for(spark, "/root/testdata/sf0.001")
@@ -424,12 +425,12 @@ def test_field_read_arithmetic_owner_fast_path(spark):
     assert "edges" not in plan, "fast path still touches the edge table"
     # equality vs the general path (edge hop), forced by masking the
     # owner-code registry
-    saved = g.field_owner_code
+    saved = g.catalog
     try:
-        g.field_owner_code = {}
+        g.catalog = replace(saved, field_owner_code={})
         slow = ns.field("c_acctbal")
     finally:
-        g.field_owner_code = saved
+        g.catalog = saved
     assert sorted(map(tuple, fast.collect())) == \
         sorted(map(tuple, slow.collect()))
 

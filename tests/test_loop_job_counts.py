@@ -10,6 +10,10 @@ probe per round exceeds them.
 A commit writes the rows ``transact`` built on the driver, so its only
 jobs are transact's field lookup and the one query for the keys of the
 stored rows it closes.
+
+A mapped stream declares the arithmetic owners of the fields it mints,
+so reading them back scans no edges, and ``fields()`` reads all of
+them with one aggregation and one left join.
 """
 
 import pytest
@@ -20,6 +24,8 @@ from zef_spark.graph.algorithms import bfs_levels, k_core, \
 from zef_spark.graph.delta import Assign, E, R, empty_graph, transact
 from zef_spark.graph.sync import GraphStore
 from zef_spark.pipeline.wrangling import identify_entities
+from zef_spark.streaming.ingest import BatchEntityMap, \
+    stream_transact_mapped
 
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
                 "spark.job.interruptOnCancel")
@@ -110,3 +116,28 @@ def test_store_compact_jobs(spark, store):
     n, head = _jobs(spark, st.compact, "store-jobs-compact")
     assert head.max_tx() == 3
     assert n <= 7
+
+
+def test_mapped_readback_jobs(spark, tmp_path):
+    # the benchmark's ingest in small: 8 micro-batches, 2 mapped fields
+    src = str(tmp_path / "events")
+    for b in range(8):
+        spark.createDataFrame(
+            [(b * 10 + i, f"t{i % 3}", float(i)) for i in range(10)],
+            "event_id long, event_type string, value double") \
+            .coalesce(1).write.mode("append").parquet(src)
+    stream = (spark.readStream
+              .schema("event_id long, event_type string, value double")
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    mapping = BatchEntityMap(ET.StreamEvent, key_col="event_id",
+                             type_code=90,
+                             fields={"event_type": 700, "value": 702})
+    st = stream_transact_mapped(empty_graph(spark), stream, mapping,
+                                checkpoint=str(tmp_path / "cp"))
+    assert st.graph.max_tx() == 8
+    n, rows = _jobs(spark, lambda: st.graph.now().all(ET.StreamEvent)
+                    .fields(event_type="event_type", value="value")
+                    .collect(), "mapped-readback-jobs")
+    assert sorted((r.event_type, r.value) for r in rows) == sorted(
+        (f"t{i % 3}", float(i)) for _ in range(8) for i in range(10))
+    assert n <= 4

@@ -20,7 +20,7 @@ def test_empty_graph_frames_are_single_partition(spark):
     for df in (g.nodes, g.edges, g.attr_values, g.txs):
         assert df.rdd.getNumPartitions() == 1
     # high-water marks seeded: no scan jobs on first use
-    assert g._max_tx == 0 and g._max_rae_id == 0 and g.rt_vrt == {}
+    assert g._max_tx == 0 and g._max_rae_id == 0 and g.catalog.rt_vrt == {}
 
 
 def test_transact_records_write_time_vrts(spark):
@@ -28,11 +28,11 @@ def test_transact_records_write_time_vrts(spark):
     from zef_spark.graph.delta import E, Assign, empty_graph, transact
     g, r = transact(empty_graph(spark), [
         E(ET.Person, name="a", fields={"Age": 30, "Name": "Ann"})])
-    assert g.rt_vrt == {"Age": "Int", "Name": "String"}
+    assert g.catalog.rt_vrt == {"Age": "Int", "Name": "String"}
     # mixed vrts for one name -> None (field() falls back to the probe)
     g2, _ = transact(g, [Assign(r["a"], "Age", 1.5)])
-    assert g2.rt_vrt["Age"] is None
-    assert g2.rt_vrt["Name"] == "String"
+    assert g2.catalog.rt_vrt["Age"] is None
+    assert g2.catalog.rt_vrt["Name"] == "String"
     # both read paths return the same values
     ns = g2.now() | z.all[ET.Person]
     assert ns.field("Name").collect()[0]["Name"] == "Ann"

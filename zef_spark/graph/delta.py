@@ -30,7 +30,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
 from ..tokens import Token
-from .graph import Graph
+from .graph import Graph, GraphCatalog
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TXS_SCHEMA, VALUE_COLS, VALUE_COL_LIST)
 
@@ -210,7 +210,7 @@ def empty_graph(spark) -> Graph:
     # marks so the first transact and now() run ZERO scan jobs
     g._max_tx = 0
     g._max_rae_id = 0
-    g.rt_vrt = {}
+    g.catalog = GraphCatalog(rt_vrt={})
     return g
 
 
@@ -488,19 +488,11 @@ def _transact(g: Graph, wishes: list, time,
     # no Spark job at all
     out._max_rae_id = max(last_minted, 1 << 60)
     out.schema_validator = getattr(g, "schema_validator", None)
-    # merge this tx's write-time VRTs into the registry (None = the
-    # graph carries none, e.g. mapper-built graphs predating transact
-    # chains: leave as-is — mapper populates its own)
-    if tx_vrts and g.rt_vrt is not None:
-        rv = dict(g.rt_vrt)
-        for fname, vrt in tx_vrts.items():
-            if fname in rv and rv[fname] != vrt:
-                rv[fname] = None        # mixed vrts: field() probes
-            else:
-                rv[fname] = vrt
-        out.rt_vrt = rv
-    else:
-        out.rt_vrt = g.rt_vrt
+    # merge this tx's write-time VRTs into the registry; every other
+    # fact goes: ids minted here carry no type code, a re-assign
+    # supersedes, a terminate closes nodes but not their attr rows
+    out.catalog = GraphCatalog(
+        rt_vrt=g.catalog.merged_vrts(tx_vrts.items()))
     out.interactive = getattr(g, "interactive", False)
     delta = TxDelta(tx, new_nodes, new_edges, new_avs, new_txs, new_tags,
                     set(supersede_aes), tset, set(close_tags))

@@ -13,9 +13,10 @@ Reference parity:
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field as dc_field
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .algorithms import _bfs_frontiers
@@ -44,6 +45,47 @@ def _rae_view(g, tx: int) -> DataFrame:
     return nodes.unionByName(edges)
 
 
+@dataclass(frozen=True)
+class GraphCatalog:
+    """What a graph's writer knows about its rows, so reads can skip
+    work. Each writer (mapper, ``empty_graph``, ``transact``, mapped
+    stream batches, ``GraphStore``, ``vacuum``, ``sync``) derives its
+    output catalog from its input's in one place; a fact it cannot
+    vouch for is left at its default, which sends reads down the
+    general path.
+
+    - ``rt_vrt``: field name → VRT of every value stored under it
+      (None for a name written with mixed VRTs: ``field()`` probes).
+      None as a whole means no registry is kept.
+    - ``field_owner_code``: field name → owner type code. Every row of
+      the field has an AE id that shares its key bits with its owner's
+      id (``mapper._mkid``), so the owner derives arithmetically from
+      ``ae_id`` with no edge scan.
+    - ``et_code``: entity type name → the type code in its ids' high
+      bits.
+    - ``rel_arith``: relation rt → (src code, dst code, divisor): the
+      dst key is the src key div the divisor (``field_via``).
+    - ``single_assignment``: every AE has exactly one assignment row
+      ever and nothing is ever terminated (bulk-ingested graphs).
+    """
+    rt_vrt: dict | None = None
+    field_owner_code: dict = dc_field(default_factory=dict)
+    et_code: dict = dc_field(default_factory=dict)
+    rel_arith: dict = dc_field(default_factory=dict)
+    single_assignment: bool = False
+
+    def merged_vrts(self, written) -> dict | None:
+        """``rt_vrt`` with one write's (name, VRT) pairs merged in: a
+        name written with a VRT other than the stored one maps to None
+        (mixed). Without a registry there is nothing to merge into."""
+        if self.rt_vrt is None:
+            return None
+        rv = dict(self.rt_vrt)
+        for name, vrt in written:
+            rv[name] = None if rv.get(name, vrt) != vrt else vrt
+        return rv
+
+
 class Graph:
     """The eternal graph: four lazy DataFrames."""
 
@@ -63,10 +105,7 @@ class Graph:
         # optional constraint validator callable(wishes, graph);
         # carried across transacts (graphs are immutable values)
         self.schema_validator = None
-        self.rt_vrt: dict[str, str] | None = None  # optional rt→VRT registry
-        # True when every AE has exactly one assignment row ever
-        # (bulk-ingested graphs): enables no-shuffle field reads
-        self.single_assignment = False
+        self.catalog = GraphCatalog()
         # optional dst-major edge PROJECTION (same rows as edges,
         # bucketed/sorted by dst_id): In-traversals probe it so the
         # join co-locates without a shuffle. Maintained by
@@ -269,7 +308,7 @@ class GraphSlice:
             # r12: mark the UNFILTERED all-of-one-ET set — field()
             # can then skip its owner-restriction join (the attr
             # rows' as-of filter already implies an alive owner of
-            # exactly this type; see _field_df)
+            # exactly this type; see _assignments)
             if isinstance(cvt, RAEType) and cvt.token.kind == "ET":
                 all_et = cvt.token.name
         ns = NodeSet(self, df)
@@ -410,11 +449,11 @@ class NodeSet:
         nothing to the edge scan's own as-of filter. Returns the
         filtered frame, or None when the fast path does not apply
         (filtered/derived sets keep the join)."""
-        g = self.frame.graph
+        cat = self.frame.graph.catalog
         all_et = getattr(self, "_all_et", None)
-        if all_et is None or not getattr(g, "single_assignment", False):
+        if all_et is None or not cat.single_assignment:
             return None
-        code = (getattr(g, "et_code", None) or {}).get(all_et)
+        code = cat.et_code.get(all_et)
         if code is None:
             return None
         return e.where(
@@ -456,7 +495,7 @@ class NodeSet:
         (e.g. revenue per order from lineitem prices).
 
         Fast path (r12): when the mapper declares `rel_rt` in
-        `g.rel_arith` (the relation's dst KEY is embedded in the src
+        `g.catalog.rel_arith` (the relation's dst KEY is embedded in the src
         key by construction — `__li_key = l_orderkey·128 + …`, so
         PartOf's dst derives as `key div 128`), the hop is PURE
         ARITHMETIC on the field read's ids: zero edge scan, zero
@@ -468,15 +507,13 @@ class NodeSet:
         field() ⋈ out_rels() on any other set/graph/relation."""
         val = self.field(field_rt, alias)
         vcol = [c for c in val.columns if c != "id"][0]
-        g = self.frame.graph
-        arith = (getattr(g, "rel_arith", None) or {}) \
-            .get(_rt_name(rel_rt))
+        cat = self.frame.graph.catalog
+        arith = cat.rel_arith.get(_rt_name(rel_rt))
         all_et = getattr(self, "_all_et", None)
         if arith is not None and all_et is not None \
-                and getattr(g, "single_assignment", False):
+                and cat.single_assignment:
             src_code, dst_code, div = arith
-            if (getattr(g, "et_code", None) or {}) \
-                    .get(all_et) == src_code:
+            if cat.et_code.get(all_et) == src_code:
                 # integer div (exact for any divisor; keys are
                 # nonnegative so div == floor division)
                 dst = F.expr(
@@ -503,93 +540,126 @@ class NodeSet:
         return NodeSet(self.frame, self.df.join(e, "id", "left_semi"))
 
     # -- attribute access --------------------------------------------
-    def _field_df(self, rt_name: str) -> DataFrame:
-        """owner id → field value at frame: entity -[rt]-> AE node
-        -> latest alive assignment (ITF:9295 `field`, ITF:6701
-        `value`). Returns (id, value).
+    def _assignments(self, names: list[str], restrict: bool,
+                     history: bool = False) -> DataFrame:
+        """Assignment rows of the fields ``names`` keyed by owner id:
+        (id, __rt, assigned_at_tx, superseded_at_tx, vrt, *values),
+        ``__rt`` being the field name (ITF:9295 `field`, ITF:6701
+        `value`). The rows alive at the frame, or with ``history``
+        every row assigned at or before it.
 
-        Fast path (mapper-built graphs): AE ids share their KEY bits
-        with the owner id (mapper.py _mkid), so the owner derives
-        ARITHMETICALLY from ae_id — the edge hop costs zero joins.
-        Valid because mapper attr edges live exactly as long as their
-        owner node (created/terminated together), so edge liveness
-        adds nothing over the NodeSet's own frame filter."""
+        A field in ``catalog.field_owner_code`` derives its owner
+        ARITHMETICALLY from ae_id (AE ids share their key bits with
+        the owner id, mapper._mkid): no edge scan, no edge join. A
+        writer declares a field only when it minted every row of it,
+        with an attr edge that enters with the AE and never closes, so
+        the edge hop would add nothing. Other fields join the alive
+        owner -[name]-> AE edges.
+
+        ``restrict`` joins the rows to this set's ids. An UNFILTERED
+        all[ET.X] of a single_assignment graph skips that join when
+        X's type code owns every name: the arithmetic id is exactly a
+        type-X id, and attr-alive-at-t implies owner-alive-at-t
+        because only mapper-built graphs are single_assignment, the
+        mapper never terminates a node, and ``transact`` (the writer
+        that does) clears the fact. Skipping it removes one broadcast
+        and a full nodes-branch scan from a whole-type field read."""
         g, t = self.frame.graph, self.frame.tx
-        owner_code = (getattr(g, "field_owner_code", None)
-                      or {}).get(rt_name)
-        if owner_code is not None and getattr(g, "single_assignment",
-                                              False):
-            av = g.attr_values.where(
-                (F.col("assigned_at_tx") <= F.lit(t)) &
-                (F.col("superseded_at_tx").isNull() |
-                 (F.col("superseded_at_tx") > F.lit(t))))
-            if "attr_rt" in av.columns:
-                av = av.where(F.col("attr_rt") == rt_name)
-            owner = (F.lit(owner_code * (1 << ID_KEY_BITS))
-                     + F.pmod(F.col("ae_id"),
-                              F.lit(1 << ID_KEY_BITS))).alias("id")
-            typed = av.select(owner, F.col("vrt"),
-                              *[F.col(c) for c in VALUE_COL_LIST])
-            # r12: an UNFILTERED all[ET.X] adds nothing to the attr
-            # rows' own as-of filter — (a) delta.terminate supersedes
-            # a dead node's attr rows at the same tx (delta.py), so
-            # attr-alive-at-t ⟹ owner-alive-at-t; (b) attr_rt plus
-            # the arithmetic owner id construct exactly type-X owner
-            # ids; (c) the set IS every alive X node. Skipping the
-            # join removes one broadcast + a full nodes-branch scan
-            # from every field read on a whole-type set.
+        cat = g.catalog
+        seen = F.col("assigned_at_tx") <= F.lit(t)
+        if not history:
+            seen = seen & (F.col("superseded_at_tx").isNull() |
+                           (F.col("superseded_at_tx") > F.lit(t)))
+        av = g.attr_values.where(seen)
+        cols = ["assigned_at_tx", "superseded_at_tx", "vrt",
+                *VALUE_COL_LIST]
+        parts = []
+        owned = {n: cat.field_owner_code[n] for n in names
+                 if n in cat.field_owner_code}
+        if owned:
+            rows = av.where(F.col("attr_rt").isin(list(owned))).select(
+                _owner_id(owned), F.col("attr_rt").alias("__rt"), *cols)
+            codes = set(owned.values())
             all_et = getattr(self, "_all_et", None)
-            if all_et is not None and \
-                    (getattr(g, "et_code", None) or {}) \
-                    .get(all_et) == owner_code:
-                return typed
-            return self.df.select("id").join(typed, "id")
-        e = _alive(g.edges, t).where(F.col("rt") == rt_name) \
-            .select(F.col("src_id").alias("id"),
-                    F.col("dst_id").alias("__ae"))
-        owners = self.df.select("id").join(e, "id", "inner")
-        av = g.attr_values.where(
-            (F.col("assigned_at_tx") <= F.lit(t)) &
-            (F.col("superseded_at_tx").isNull() |
-             (F.col("superseded_at_tx") > F.lit(t))))
-        if "attr_rt" in av.columns:
-            # per-branch literal in mapper-built graphs: constant-folds
-            # every other attr union branch away (delegate-index read)
-            av = av.where(F.col("attr_rt") == rt_name)
-        value = F.coalesce(*[F.col(c).cast("string")
-                             for c in VALUE_COL_LIST])
-        typed = av.select(
-            F.col("ae_id").alias("__ae"),
-            F.col("assigned_at_tx"),
-            F.col("vrt"),
-            *[F.col(c) for c in VALUE_COL_LIST])
-        joined = owners.join(typed, "__ae", "inner")
-        if getattr(g, "single_assignment", False):
-            # mapper-built graphs: exactly one assignment row per AE
-            # ever — skip the defensive aggregation (saves a shuffle)
-            return joined.drop("__ae", "assigned_at_tx")
-        # general graphs: ≤1 *alive* row per AE at any frame, but be
-        # robust to idempotent re-assigns via max_by on assigned_at_tx
-        per_owner = joined.groupBy("id").agg(
-            F.max_by(F.struct(*[F.col(c) for c in VALUE_COL_LIST],
-                              F.col("vrt")),
-                     F.col("assigned_at_tx")).alias("__v"))
-        return per_owner.select("id", F.col("__v.*"))
+            if restrict and not (cat.single_assignment
+                                 and all_et is not None
+                                 and {cat.et_code.get(all_et)} == codes):
+                rows = self.df.select("id").join(rows, "id")
+            parts.append(rows)
+        edged = [n for n in names if n not in owned]
+        if edged:
+            e = _alive(g.edges, t).where(F.col("rt").isin(edged)) \
+                .select(F.col("src_id").alias("id"),
+                        F.col("dst_id").alias("__ae"),
+                        F.col("rt").alias("__rt"))
+            if restrict:
+                e = self.df.select("id").join(e, "id", "inner")
+            typed = av.where(F.col("attr_rt").isin(edged)).select(
+                F.col("ae_id").alias("__ae"), "attr_rt", *cols)
+            rows = e.join(typed, "__ae", "inner")
+            if len(edged) > 1:
+                # an assignment row belongs to the field its edge names
+                rows = rows.where(F.col("__rt") == F.col("attr_rt"))
+            parts.append(rows.select("id", "__rt", *cols))
+        return reduce(DataFrame.unionByName, parts)
 
-    def field(self, rt, alias: str | None = None) -> DataFrame:
-        """(id, <alias>) — value typed by the AE's VRT. The VRT comes
-        from the graph's static rt→VRT registry when available (no
-        probe); otherwise a bounded probe of the attr branch."""
-        name = _rt_name(rt)
-        fdf = self._field_df(name)
-        vrt = (self.frame.graph.rt_vrt or {}).get(name) \
-            if getattr(self.frame.graph, "rt_vrt", None) else None
+    def _value_col(self, name: str, probe) -> str:
+        """Physical value column of field ``name``: its VRT from the
+        catalog's rt_vrt, else from a bounded distinct-VRT probe of
+        ``probe()`` (a mixed or unregistered name)."""
+        vrt = (self.frame.graph.catalog.rt_vrt or {}).get(name)
         if vrt is None:
             vrts = [r[0] for r in
-                    fdf.select("vrt").distinct().limit(2).collect()]
+                    probe().select("vrt").distinct().limit(2).collect()]
             vrt = vrts[0] if vrts else "String"
-        col = VALUE_COLS.get(vrt, "value_str")
-        return fdf.select("id", F.col(col).alias(alias or name))
+        return VALUE_COLS.get(vrt, "value_str")
+
+    def _field_frames(self, spec: dict[str, str],
+                      restrict: bool) -> list[DataFrame]:
+        """(id, <alias>, ...) frames for ``spec`` (alias → field name),
+        one row per owner that has any of the fields.
+
+        A single_assignment graph has one assignment row per AE ever,
+        so each field is its own aggregation-free frame, restricted to
+        this set. Any other graph may hold several alive rows per
+        owner and field (a mapped stream that re-keys a key appends a
+        second open row), so the value is the latest alive one:
+        ``max_by(value, assigned_at_tx)``. All fields share ONE
+        ``groupBy(id)`` with one ``max_by`` per field, each ordered only
+        by its own field's rows. ``restrict`` joins the rows to this
+        set before aggregating; ``fields()`` of a whole-type set leaves
+        that to its one left join."""
+        g = self.frame.graph
+        if g.catalog.single_assignment:
+            out = []
+            for alias, name in spec.items():
+                rows = self._assignments([name], restrict=True)
+                col = self._value_col(name, lambda: rows)
+                out.append(rows.select("id", F.col(col).alias(alias)))
+            return out
+        if not spec:
+            return []
+        names = list(dict.fromkeys(spec.values()))
+        rows = self._assignments(names, restrict)
+
+        def latest(name, col):
+            return F.max_by(col, F.when(F.col("__rt") == name,
+                                        F.col("assigned_at_tx")))
+
+        def probe(name):
+            return lambda: self._assignments([name], True).groupBy("id") \
+                .agg(latest(name, F.col("vrt")).alias("vrt"))
+
+        return [rows.groupBy("id").agg(*[
+            latest(name, F.col(self._value_col(name, probe(name))))
+            .alias(alias) for alias, name in spec.items()])]
+
+    def field(self, rt, alias: str | None = None) -> DataFrame:
+        """(id, <alias>) — the field's value at the frame for each node
+        of this set that has it, typed by the AE's VRT (the catalog's
+        rt→VRT registry, or a bounded probe)."""
+        name = _rt_name(rt)
+        return self._field_frames({alias or name: name}, restrict=True)[0]
 
     def field_history(self, rt, alias: str | None = None) -> DataFrame:
         """(id, <alias>, assigned_at_tx, superseded_at_tx) — the FULL
@@ -602,35 +672,9 @@ class NodeSet:
         edge/arithmetic owner plumbing as ``field``, WITHOUT the
         latest-alive filter."""
         name = _rt_name(rt)
-        g, t = self.frame.graph, self.frame.tx
-        owner_code = (getattr(g, "field_owner_code", None)
-                      or {}).get(name)
-        av = g.attr_values.where(F.col("assigned_at_tx") <= F.lit(t))
-        if "attr_rt" in av.columns:
-            av = av.where(F.col("attr_rt") == name)
-        if owner_code is not None:
-            owner = (F.lit(owner_code * (1 << ID_KEY_BITS))
-                     + F.pmod(F.col("ae_id"),
-                              F.lit(1 << ID_KEY_BITS))).alias("id")
-            hist = av.select(owner, "vrt", *VALUE_COL_LIST,
-                             "assigned_at_tx", "superseded_at_tx")
-            hist = self.df.select("id").join(hist, "id")
-        else:
-            e = _alive(g.edges, t).where(F.col("rt") == name) \
-                .select(F.col("src_id").alias("id"),
-                        F.col("dst_id").alias("__ae"))
-            ids = self.df.select("id")
-            hist = (ids.join(e, "id")
-                    .join(av.withColumnRenamed("ae_id", "__ae"), "__ae")
-                    .select("id", "vrt", *VALUE_COL_LIST,
-                            "assigned_at_tx", "superseded_at_tx"))
-        vrt = (g.rt_vrt or {}).get(name) if getattr(g, "rt_vrt",
-                                                    None) else None
-        if vrt is None:
-            vrts = [r[0] for r in
-                    hist.select("vrt").distinct().limit(2).collect()]
-            vrt = vrts[0] if vrts else "String"
-        col = VALUE_COLS.get(vrt, "value_str")
+        t = self.frame.tx
+        hist = self._assignments([name], restrict=True, history=True)
+        col = self._value_col(name, lambda: hist)
         # an end-tx AFTER the frame is future knowledge: from this
         # frame's point of view the interval is still open
         end = F.when(F.col("superseded_at_tx") <= F.lit(t),
@@ -640,16 +684,21 @@ class NodeSet:
                            end.alias("superseded_at_tx"))
 
     def fields(self, *rts, **aliased) -> DataFrame:
-        """(id, f1, f2, ...) — one join per field; Catalyst prunes each
-        attr branch by its rt literal."""
-        spec = {(_rt_name(r)): _rt_name(r) for r in rts}
-        spec.update({v: _rt_name(k) for k, v in ()})
+        """(id, et, uid, f1, f2, ...) — every node of this set with its
+        fields at the frame, NULL where a node lacks one. On a
+        single_assignment graph each field is one left join of its own
+        aggregation-free read (Catalyst prunes each attr branch by its
+        rt literal). Otherwise all fields come from ONE aggregation
+        (``_field_frames``) and ONE left join. A filtered set restricts
+        the rows to its ids before aggregating; a whole-type set leaves
+        that to the left join."""
+        spec = {_rt_name(r): _rt_name(r) for r in rts}
         for alias, r in aliased.items():
             spec[alias] = _rt_name(r)
         out = self.df.select("id", "et", "uid")
-        for alias, rt_name in spec.items():
-            fdf = self.field(rt_name, alias)
-            out = out.join(fdf, "id", "left")
+        restrict = getattr(self, "_all_et", None) is None
+        for vals in self._field_frames(spec, restrict):
+            out = out.join(vals, "id", "left")
         return out
 
     def select_by_field(self, rt, value) -> "NodeSet":
@@ -660,24 +709,19 @@ class NodeSet:
         av = g.attr_values.where(
             (F.col("assigned_at_tx") <= F.lit(t)) &
             (F.col("superseded_at_tx").isNull() |
-             (F.col("superseded_at_tx") > F.lit(t))))
-        if "attr_rt" in av.columns:
-            av = av.where(F.col("attr_rt") == name)
+             (F.col("superseded_at_tx") > F.lit(t)))) \
+            .where(F.col("attr_rt") == name)
         preds = [_value_predicate(c, value) for c in VALUE_COL_LIST]
         preds = [p for p in preds if p is not None]
         if not preds:
             raise TypeError(f"no value column matches {type(value)}")
         cond = reduce(lambda a, b: a | b, preds)
-        owner_code = (getattr(g, "field_owner_code", None)
-                      or {}).get(name)
-        if owner_code is not None and getattr(g, "single_assignment",
-                                              False):
-            # arithmetic owner ids (see _field_df fast path): the
-            # lookup is ONE semi-join, no edge hop
-            owners = av.where(cond).select(
-                (F.lit(owner_code * (1 << ID_KEY_BITS))
-                 + F.pmod(F.col("ae_id"),
-                          F.lit(1 << ID_KEY_BITS))).alias("id"))
+        owner_code = g.catalog.field_owner_code.get(name)
+        if owner_code is not None:
+            # arithmetic owner ids (see _assignments): the lookup is ONE
+            # semi-join, no edge hop; duplicate rows (a re-keyed mapped
+            # key) do not matter to a semi-join
+            owners = av.where(cond).select(_owner_id({name: owner_code}))
             return NodeSet(self.frame,
                            self.df.join(owners, "id", "left_semi"))
         ae_ids = av.where(cond).select(F.col("ae_id").alias("__ae"))
@@ -796,6 +840,20 @@ class EdgeSet:
         allows (rel, RT.x, value) triples): same AE resolution as
         NodeSet.field keyed by this edge set's ids."""
         return self._as_rae_set().field(rt, alias)
+
+
+def _owner_id(codes: dict) -> Column:
+    """Owner id of an assignment row of a field declared in
+    ``field_owner_code`` (field name → owner type code): the owner's
+    type code over the AE id's key bits (mapper._mkid)."""
+    (_, first), *rest = codes.items()
+    code = F.lit(first << ID_KEY_BITS)
+    for name, c in rest:
+        if c != first:
+            code = F.when(F.col("attr_rt") == name,
+                          F.lit(c << ID_KEY_BITS)).otherwise(code)
+    return (code + F.pmod(F.col("ae_id"),
+                          F.lit(1 << ID_KEY_BITS))).alias("id")
 
 
 def _rt_name(rt) -> str:

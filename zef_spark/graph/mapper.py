@@ -23,12 +23,13 @@ from __future__ import annotations
 
 import datetime
 from functools import reduce
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .delta import _local_df
-from .graph import Graph
+from .graph import Graph, GraphCatalog
 from .schema import ID_KEY_BITS, TXS_SCHEMA
 
 _EPOCH = "1992-01-01"
@@ -135,7 +136,7 @@ def build_graph(spark: SparkSession, sf_dir: str) -> Graph:
             vrt = _SPARK_TO_VRT[dtype]
             rt_vrt[colname] = vrt
             # field_owner_code keys by column name ALONE (it backs the
-            # arithmetic owner-id fast path in NodeSet._field_df /
+            # arithmetic owner-id fast path in NodeSet._assignments /
             # select_by_field); a name shared by two tables would let
             # the later table's code silently mis-attribute the other
             # table's values, so a collision must be a hard error —
@@ -229,18 +230,7 @@ def build_graph(spark: SparkSession, sf_dir: str) -> Graph:
     max_code = max(next_attr_code, rel_code,
                    max(c for c, _, _ in _TABLES.values()) + 1)
     g._max_rae_id = max_code << ID_KEY_BITS
-    g.rt_vrt = rt_vrt  # static rt→VRT map: lets field() skip probing
-    g.single_assignment = True  # one assignment per AE → no-shuffle reads
-    g.field_owner_code = field_owner_code  # arithmetic owner-id reads
-    # et name -> type code: lets field() over an UNFILTERED all[ET.X]
-    # skip the owner-restriction join entirely (r12; _field_df)
-    g.et_code = {et: code for code, et, _ in _TABLES.values()}
-    # relations whose dst KEY is embedded in the src key by id
-    # construction: __li_key = (l_orderkey·8 + l_linenumber)·16 + occ,
-    # so PartOf's dst order key = src key div 128 — field_via() hops
-    # them arithmetically, zero edge scan / join (graph.py r12)
-    g.rel_arith = {"PartOf": (_TABLES["lineitem"][0],
-                              _TABLES["orders"][0], 128)}
+    g.catalog = _catalog(rt_vrt, field_owner_code)
     # max_tx without the txs dedup shuffle: datediff is monotonic, so
     # max(tx) = tx_of(max(date)) — two column maxes that parquet
     # aggregate pushdown answers from footer stats.
@@ -251,7 +241,28 @@ def build_graph(spark: SparkSession, sf_dir: str) -> Graph:
     return g
 
 
+def _catalog(rt_vrt: dict, field_owner_code: dict) -> GraphCatalog:
+    """What every mapper-built graph declares: the static rt→VRT map
+    (field() skips probing), arithmetic owner-id reads, one assignment
+    per AE (no-shuffle reads), et name → type code (field() over an
+    UNFILTERED all[ET.X] skips the owner-restriction join), and the
+    relations whose dst KEY is embedded in the src key by id
+    construction: __li_key = (l_orderkey·8 + l_linenumber)·16 + occ,
+    so PartOf's dst order key = src key div 128 — field_via() hops
+    them arithmetically, zero edge scan / join."""
+    return GraphCatalog(
+        rt_vrt=rt_vrt, field_owner_code=field_owner_code,
+        et_code={et: code for code, et, _ in _TABLES.values()},
+        rel_arith={"PartOf": (_TABLES["lineitem"][0],
+                              _TABLES["orders"][0], 128)},
+        single_assignment=True)
+
+
 _GRAPH_CACHE: dict = {}
+
+# materialized graphs live in the checkout this module sits in,
+# unless ZEF_SPARK_GRAPH_CACHE points elsewhere
+_DEFAULT_CACHE = str(Path(__file__).resolve().parents[2] / ".graph_cache")
 
 # Bump when the mapper's output schema/ids change: invalidates the
 # on-disk materialized graphs.
@@ -286,8 +297,7 @@ def graph_for(spark: SparkSession, sf_dir: str) -> Graph:
     ckey = (key, layout)
     if ckey in _GRAPH_CACHE:
         return _GRAPH_CACHE[ckey]
-    root = os.environ.get("ZEF_SPARK_GRAPH_CACHE",
-                          "/root/repo/.graph_cache")
+    root = os.environ.get("ZEF_SPARK_GRAPH_CACHE", _DEFAULT_CACHE)
     tag = key.strip("/").replace("/", "_")
     path = f"{root}/v{_CACHE_VERSION}/{tag}"
     meta_path = f"{path}/meta.json"
@@ -297,8 +307,8 @@ def graph_for(spark: SparkSession, sf_dir: str) -> Graph:
         tmp = f"{path}.tmp.{os.getpid()}"
         built = build_graph(spark, key)
         built.materialize(tmp)
-        meta = {"rt_vrt": built.rt_vrt, "max_tx": built.max_tx(),
-                "field_owner_code": built.field_owner_code,
+        meta = {"rt_vrt": built.catalog.rt_vrt, "max_tx": built.max_tx(),
+                "field_owner_code": built.catalog.field_owner_code,
                 "id_floor": built._max_rae_id}
         with open(f"{tmp}/meta.json", "w") as f:
             json.dump(meta, f)
@@ -321,12 +331,8 @@ def graph_for(spark: SparkSession, sf_dir: str) -> Graph:
         if not spark.catalog.tableExists(f"{prefix}_nodes"):
             g.materialize_bucketed(prefix, dual_projection=True)
         g = Graph.load_bucketed(spark, prefix)
-    g.rt_vrt = meta["rt_vrt"]
-    g.field_owner_code = meta.get("field_owner_code") or {}
-    g.et_code = {et: code for code, et, _ in _TABLES.values()}
-    g.rel_arith = {"PartOf": (_TABLES["lineitem"][0],
-                              _TABLES["orders"][0], 128)}
-    g.single_assignment = True
+    g.catalog = _catalog(meta["rt_vrt"],
+                         meta.get("field_owner_code") or {})
     g._max_tx = meta["max_tx"]
     g._max_rae_id = meta.get("id_floor")
     _GRAPH_CACHE[ckey] = g

@@ -25,7 +25,10 @@ shared storage (the shape Delta Lake's transaction log made standard):
   base ∪ segment appends, with closures applied as ONE broadcast
   join per table (segments are wish-sized — control-plane volume;
   bulk data enters through graph/mapper.py or the distributed
-  streaming ingest, not through wishes).
+  streaming ingest, not through wishes). Every segment also records
+  the head's catalog facts as of its tx (``catalog.json``: the rt→VRT
+  registry and ``single_assignment``), and the rebuilt head takes the
+  newest one, so it knows every field name a segment stored.
 
 Any number of processes (or Spark drivers) pointing at the same path
 observe the same serializable tx chain; a reader is never blocked by
@@ -69,7 +72,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .delta import TxDelta, _arrow_table, _local_df, _transact
-from .graph import Graph
+from .graph import Graph, GraphCatalog
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TAGS_SCHEMA, TXS_SCHEMA)
 
@@ -110,6 +113,15 @@ def _write_table(seg: str, name: str, rows: list) -> None:
 
 def _tx_row(tx: int) -> tuple:
     return (tx, datetime.datetime(2000, 1, 1) + datetime.timedelta(days=tx))
+
+
+def _write_catalog(seg: str, cat: GraphCatalog) -> None:
+    """The catalog facts of the head as of segment ``seg``'s tx, for
+    ``_build``: the rt→VRT registry (every name and VRT the segment
+    wrote merged in) and whether it is still single_assignment."""
+    with open(os.path.join(seg, "catalog.json"), "w") as f:
+        json.dump({"rt_vrt": cat.rt_vrt,
+                   "single_assignment": cat.single_assignment}, f)
 
 
 def _closures(before: Graph, d: TxDelta) -> dict[str, list]:
@@ -301,9 +313,8 @@ class GraphStore:
         os.makedirs(os.path.join(path, "txlog"), exist_ok=True)
         g.materialize(os.path.join(path, "base"))
         meta = {"base_max_tx": g.max_tx(),
-                "rt_vrt": getattr(g, "rt_vrt", None),
-                "single_assignment": getattr(g, "single_assignment",
-                                             False),
+                "rt_vrt": g.catalog.rt_vrt,
+                "single_assignment": g.catalog.single_assignment,
                 # id floor of the base: every later commit (wish OR
                 # mapped) must mint RAE ids above this. A mapper-built
                 # base carries its arithmetic-band bound here; without
@@ -362,6 +373,22 @@ class GraphStore:
                 with open(ck) as f:
                     base = os.path.join(self.path, json.load(f)["base"])
                 start, ck_seg = tx, sp
+        # the catalog is the newest recorded one: the checkpoint's or a
+        # later segment's. A segment that records none (written before
+        # segments recorded theirs) leaves the names it stored unknown,
+        # so the head keeps no registry and reads take the general path.
+        cat = GraphCatalog(
+            rt_vrt=meta.get("rt_vrt"),
+            single_assignment=bool(meta.get("single_assignment")))
+        for t, sp in segs:
+            if t < start:
+                continue
+            cp = os.path.join(sp, "catalog.json")
+            if os.path.exists(cp):
+                with open(cp) as f:
+                    cat = GraphCatalog(**json.load(f))
+            else:
+                cat = GraphCatalog()
         segs = [(t, p) for t, p in segs if t > start]
         g = Graph.load(spark, base)
 
@@ -441,8 +468,7 @@ class GraphStore:
             tags = apply(tags, ["name", "valid_from_tx"],
                          "valid_to_tx", tg_new, tg_cl)
         out = Graph(nodes, edges, avs, txs, tags)
-        out.rt_vrt = meta.get("rt_vrt")
-        out.single_assignment = bool(meta.get("single_assignment"))
+        out.catalog = cat
         out._max_tx = top_tx
         out._max_rae_id = id_floor or None
         return out
@@ -462,6 +488,7 @@ class GraphStore:
             tx = delta.tx
             tmp = self.protocol.temp_segment(self.path)
             _write_delta(tmp, g, delta)
+            _write_catalog(tmp, g2.catalog)
             with open(os.path.join(tmp, "idmax.json"), "w") as f:
                 json.dump({"idmax": g2._max_rae_id or 0}, f)
             if not self.protocol.claim(self.path, tx, tmp):
@@ -495,6 +522,7 @@ class GraphStore:
             os.makedirs(tmp, exist_ok=True)
             with open(os.path.join(tmp, "checkpoint.json"), "w") as f:
                 json.dump({"base": base_name}, f)
+            _write_catalog(tmp, g.catalog)
             # carry the folded history's id floor: clean() may delete
             # the pre-checkpoint segments whose idmax records it
             with open(os.path.join(tmp, "idmax.json"), "w") as f:
@@ -525,7 +553,7 @@ class GraphStore:
         stay the control plane. On a lost claim race the segment is
         rewritten against the refreshed head's tx (the mapping's ids
         are tx-independent, so retry is cheap and safe)."""
-        from ..streaming.ingest import mapped_parts
+        from ..streaming.ingest import _mapped_catalog, mapped_parts
         for _ in range(max_retries):
             g = self.refresh()
             tx = g.max_tx() + 1
@@ -547,6 +575,8 @@ class GraphStore:
             if av_parts:
                 wr(av_parts, "attr_values")
             _write_table(tmp, "txs", [_tx_row(tx)])
+            _write_catalog(tmp, _mapped_catalog(g.catalog, mapping,
+                                                batch_df))
             # record the mapping's band bound: wish commits in ANY
             # process (now or after restart) must mint above it, or a
             # wish id equals the arithmetic id this mapping mints for

@@ -44,8 +44,8 @@ def vacuum(g: Graph, before_tx: int) -> Graph:
               and "valid_to_tx" in g.tags.columns else g.tags))
     out.vacuum_horizon = before_tx
     out.schema_validator = g.schema_validator
-    out.rt_vrt = g.rt_vrt
-    out.single_assignment = g.single_assignment
+    # the surviving rows keep their ids, VRTs and single assignment
+    out.catalog = g.catalog
     return out
 
 

@@ -283,7 +283,7 @@ def sdl_of_graph(g) -> str:
                .join(n.withColumnRenamed("id", "dst_id")
                      .withColumnRenamed("et", "dst_et"), "dst_id")
                .select("src_et", "rt", "dst_et").distinct().collect())
-    rt_vrt = getattr(graph, "rt_vrt", None) or {}
+    rt_vrt = graph.catalog.rt_vrt or {}
     fields: dict[str, dict[str, str]] = {}
     for r in triples:
         src, rt, dst = r["src_et"], r["rt"], r["dst_et"]

@@ -388,7 +388,8 @@ def _sync(g, *args):
     ``g | sync[path]`` — materialize the graph (token-partitioned
     parquet, Graph.materialize) and return the DISK-BACKED graph, so
     subsequent queries read pruned scans instead of the transact
-    lineage. Carries rt_vrt / single_assignment metadata over.
+    lineage. Carries the graph's catalog over: the stored rows are
+    the same rows, with the same ids.
     For MULTI-PROCESS shared-graph sync (the reference's ZefHub robot
     scenario) use ``graph.sync.GraphStore`` — a tx-segment log with
     optimistic atomic-rename commits; any number of processes on the
@@ -399,8 +400,7 @@ def _sync(g, *args):
     from ..graph.graph import Graph
     g.materialize(path)
     g2 = Graph.load(g.spark, path)
-    g2.rt_vrt = getattr(g, "rt_vrt", None)
-    g2.single_assignment = getattr(g, "single_assignment", False)
+    g2.catalog = g.catalog
     g2.schema_validator = getattr(g, "schema_validator", None)
     return g2
 

@@ -22,6 +22,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: files a clustered write produces when the caller names no count. A
+#: fixed number, not the core count: how finely footer stats can skip
+#: must not depend on the machine that wrote the table (4 files can
+#: only skip in steps of 0.25).
+CLUSTER_FILES = 16
+
 
 def z_value(cols: list, bits: int = 10):
     """Interleave the low `bits` of the given integer rank columns
@@ -71,10 +77,10 @@ def write_z_ordered(df: DataFrame, path: str, cols: list[str],
                     mode: str = "overwrite") -> None:
     """Write `df` Z-ordered by `cols`: range-partitioned on the
     z-value (files disjoint in z-space) and sorted within partitions
-    (row groups disjoint). n_files=0 keeps the session's shuffle
-    parallelism."""
+    (row groups disjoint). n_files=0 writes ``CLUSTER_FILES``
+    files."""
     zdf = z_order(df, cols, bits)
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
+    n = n_files or CLUSTER_FILES
     (zdf.repartitionByRange(n, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
@@ -105,7 +111,7 @@ def write_search_clustered(df: DataFrame, path: str, cols: list[str],
         write_z_ordered(df, path, cols, n_files=n_files, bits=bits,
                         mode=mode)
         return "zorder"
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
+    n = n_files or CLUSTER_FILES
     (df.repartitionByRange(n, *[F.col(c) for c in cols])
        .sortWithinPartitions(*cols)
        .write.mode(mode).parquet(path))

@@ -28,7 +28,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from ..graph.delta import E, SetField, transact
-from ..graph.graph import Graph
+from ..graph.graph import Graph, GraphCatalog
 from ..tokens import ET
 
 
@@ -215,8 +215,16 @@ class MappedStreamTransactor:
     mark are one atomic graph value, a replayed batch is skipped.
     Append-oriented: batch keys are expected to be new entities (the
     firehose case); re-keying an existing id appends a second open
-    assignment row — dedupe upstream (e.g. pipeline/dedup.py
-    incremental_dedup) or via merge semantics in a wish tx.
+    node, edge and assignment row. Field reads stay exact: they take
+    the latest alive assignment per owner (``NodeSet.fields``). Dedupe
+    upstream (e.g. pipeline/dedup.py incremental_dedup) or via merge
+    semantics in a wish tx when one node row per key matters.
+
+    Each batch records what it minted in the graph's catalog
+    (``_mapped_catalog``): the mapped fields' VRTs and, for fields only
+    this mapping ever wrote, the owner type code. Readbacks then derive
+    each value's owner arithmetically from its AE id, with no edge scan
+    and no edge join.
 
     ``checkpoint_every``: localCheckpoint the four tables every N
     batches so a long-running stream doesn't accrete an unbounded
@@ -292,24 +300,7 @@ class MappedStreamTransactor:
         out._max_tx = tx
         out._max_rae_id = led_edge
         out.schema_validator = getattr(g, "schema_validator", None)
-        # register the mapped fields' write-time VRTs (mirrors
-        # delta.transact) so readbacks skip the distinct-vrt probe job;
-        # a name remapped to a different type goes ambiguous (None =
-        # field() probes, exactly the pre-registry behavior)
-        if g.rt_vrt is not None:
-            from ..graph.mapper import _SPARK_TO_VRT
-            rv = dict(g.rt_vrt)
-            dt = dict(batch_df.dtypes)
-            for colname in m.fields:
-                vrt = _SPARK_TO_VRT[dt[colname]]
-                rv[colname] = (None if rv.get(colname, vrt) != vrt
-                               else vrt)
-            rv["batch_key"] = ("String"
-                               if rv.get("batch_key", "String") == "String"
-                               else None)
-            out.rt_vrt = rv
-        else:
-            out.rt_vrt = g.rt_vrt
+        out.catalog = _mapped_catalog(g.catalog, m, batch_df)
         self._n_applied += 1
         if self._n_applied % self.checkpoint_every == 0:
             out.nodes = out.nodes.localCheckpoint()
@@ -319,6 +310,40 @@ class MappedStreamTransactor:
         self.graph = out
         self._applied.add(key)
         return True
+
+
+def _mapped_catalog(cat: GraphCatalog, m: BatchEntityMap,
+                    batch_df: DataFrame) -> GraphCatalog:
+    """The catalog after one mapped batch over a graph with ``cat``.
+
+    - ``rt_vrt``: the mapped fields' and the ledger's write-time VRTs
+      merge in (as in ``delta.transact``), so readbacks skip the
+      distinct-vrt probe job.
+    - ``field_owner_code``: a mapped field is declared with the
+      mapping's type code when the graph has never stored it, or
+      already declares it with that code. Then every row of it was
+      minted by this mapping (owner = ``mkid(type_code, key)``, AE =
+      ``mkid(field_code, key)``): a ``transact`` in between would have
+      cleared the declaration. Any other mapped field loses its
+      declaration and reads through its edges, and so does
+      ``batch_key``: the ledger's rows carry minted ids.
+    - ``single_assignment`` is False: a batch that re-keys an existing
+      key appends a second open row. The type-code facts go with it.
+    """
+    from ..graph.mapper import _SPARK_TO_VRT
+    dt = dict(batch_df.dtypes)
+    written = [(c, _SPARK_TO_VRT[dt[c]]) for c in m.fields]
+    owners = dict(cat.field_owner_code)
+    for c in m.fields:
+        fresh = cat.rt_vrt is not None and c not in cat.rt_vrt
+        if fresh or owners.get(c) == m.type_code:
+            owners[c] = m.type_code
+        else:
+            owners.pop(c, None)
+    owners.pop("batch_key", None)
+    return GraphCatalog(
+        rt_vrt=cat.merged_vrts(written + [("batch_key", "String")]),
+        field_owner_code=owners)
 
 
 def stream_transact_mapped(g: Graph, stream_df: DataFrame,
