@@ -136,15 +136,16 @@ def main():
               "SPARK_GRAFT_BENCH_REQUIRE_IDLE=1", file=sys.stderr)
         sys.exit(3)
 
-    def run_pass() -> tuple[dict[str, float], dict[str, float]]:
+    def time_queries(names, data_dir) -> tuple[dict, dict]:
+        """Min-of-2 noop-sink time of each query on ``data_dir``, and
+        load1 at each query's start."""
         timings: dict[str, float] = {}
         # r08 verdict order #7: record load1 at QUERY start, not pass
         # start — a pass takes minutes, and "what was the host doing
         # when THIS query ran" is the number that explains a same-day
         # 13% spread on an identical plan.
         loads: dict[str, float] = {}
-        for name in HEADLINE:
-            fn = qs[name]
+        for name in names:
             best = None
             loads[name] = host_state()[1]
             for _rep in range(2):
@@ -156,7 +157,7 @@ def main():
                 spark.catalog.clearCache()
                 spark._jvm.System.gc()
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
+                df = qs[name](spark, data_dir)
                 df.write.mode("overwrite").format("noop").save()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
@@ -170,7 +171,7 @@ def main():
     runs = []
     for p in range(max(1, n_passes)):
         state, load1 = host_state()
-        t_pass, q_loads = run_pass()
+        t_pass, q_loads = time_queries(HEADLINE, sf_dir)
         runs.append({"pass": p + 1, "host_state": state,
                      "load1_start": load1,
                      "query_load1": q_loads,
@@ -194,17 +195,7 @@ def main():
         os.environ["ZEF_SPARK_GRAPH_LAYOUT"] = "bucketed"
         try:
             graph_for(spark, sf_dir)          # build/serve, untimed
-            for name in g_queries:
-                fn, best = qs[name], None
-                for _rep in range(2):
-                    spark.catalog.clearCache()
-                    spark._jvm.System.gc()
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.mode("overwrite") \
-                        .format("noop").save()
-                    dt = time.perf_counter() - t0
-                    best = dt if best is None else min(best, dt)
-                bucketed[name] = round(best, 3)
+            bucketed, _ = time_queries(g_queries, sf_dir)
         finally:
             os.environ.pop("ZEF_SPARK_GRAPH_LAYOUT", None)
 
@@ -221,19 +212,7 @@ def main():
     sf1_dir = os.environ.get("SPARK_GRAFT_BENCH_SF1_DIR", "")
     if sf1_dir and os.path.isdir(sf1_dir):
         graph_for(spark, sf1_dir)             # ingest = load, untimed
-        t_sf1, l_sf1 = {}, {}
-        for name in HEADLINE:
-            fn, best = qs[name], None
-            l_sf1[name] = host_state()[1]
-            for _rep in range(2):
-                spark.catalog.clearCache()
-                spark._jvm.System.gc()
-                t0 = time.perf_counter()
-                fn(spark, sf1_dir).write.mode("overwrite") \
-                    .format("noop").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            t_sf1[name] = round(best, 3)
+        t_sf1, l_sf1 = time_queries(HEADLINE, sf1_dir)
         sf1_tier = {"dir": sf1_dir,
                     "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
                     "total": round(sum(t_sf1.values()), 3),

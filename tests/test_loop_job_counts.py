@@ -14,6 +14,10 @@ stored rows it closes.
 A mapped stream declares the arithmetic owners of the fields it mints,
 so reading them back scans no edges, and ``fields()`` reads all of
 them with one aggregation and one left join.
+
+A mapped batch over a graph whose id floor is known runs only the
+key-range probe; ``commit_mapped`` adds one distributed write per
+non-empty table.
 """
 
 import pytest
@@ -25,7 +29,7 @@ from zef_spark.graph.delta import Assign, E, R, empty_graph, transact
 from zef_spark.graph.sync import GraphStore
 from zef_spark.pipeline.wrangling import identify_entities
 from zef_spark.streaming.ingest import BatchEntityMap, \
-    stream_transact_mapped
+    MappedStreamTransactor, stream_transact_mapped
 
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
                 "spark.job.interruptOnCancel")
@@ -140,4 +144,40 @@ def test_mapped_readback_jobs(spark, tmp_path):
                     .collect(), "mapped-readback-jobs")
     assert sorted((r.event_type, r.value) for r in rows) == sorted(
         (f"t{i % 3}", float(i)) for _ in range(8) for i in range(10))
+    assert n <= 4
+
+
+_EVENTS = "event_id long, event_type string, value double"
+_EVENT_MAP = BatchEntityMap(ET.StreamEvent, key_col="event_id",
+                            type_code=90,
+                            fields={"event_type": 700, "value": 702})
+
+
+def _one_file_batch(spark):
+    # one partition, like a micro-batch read from one file: the probe's
+    # LIMIT 1 then scans it in one job
+    return spark.createDataFrame(
+        [(i, f"t{i % 3}", float(i)) for i in range(10)], _EVENTS) \
+        .coalesce(1)
+
+
+def test_mapped_batch_jobs(spark, store):
+    st, _ = store
+    g = st.refresh()
+    assert g._max_rae_id is not None      # the store records the floor
+    sink = MappedStreamTransactor(g, _EVENT_MAP, "s1")
+    batch = _one_file_batch(spark)
+    n, applied = _jobs(spark, lambda: sink.apply_batch(batch, 0),
+                       "mapped-batch-jobs")
+    assert applied and sink.graph.max_tx() == 2
+    assert n <= 1
+
+
+def test_store_commit_mapped_jobs(spark, store):
+    st, _ = store
+    st.refresh()
+    batch = _one_file_batch(spark)
+    n, head = _jobs(spark, lambda: st.commit_mapped(batch, _EVENT_MAP),
+                    "store-jobs-commit-mapped")
+    assert head.max_tx() == 2
     assert n <= 4

@@ -89,6 +89,24 @@ def test_fingerprint_matches_naive(spark):
         assert got[i] == ref, (i, t)
 
 
+def test_fingerprint_keeps_input_columns(spark):
+    """Every input column comes out unchanged, even one named like a
+    temp column, and the normalized text is its own projection: the
+    regexp runs once per row, not inside the per-shingle lambda."""
+    from zef_spark.pipeline.text import fingerprint
+    df = spark.createDataFrame([(1, "Hello  World example", "keep")],
+                               "doc_id long, text string, __fp_norm string")
+    out = fingerprint(df, "text")
+    assert out.columns == ["doc_id", "text", "__fp_norm", "fingerprint"]
+    row = out.collect()[0]
+    assert (row["doc_id"], row["text"], row["__fp_norm"]) == \
+        (1, "Hello  World example", "keep")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_replace") == 1
+    assert not [ln for ln in plan.splitlines()
+                if "lambdafunction" in ln and "regexp_replace" in ln]
+
+
 def test_ngram_pairs_identical_plan_values(spark):
     from zef_spark.pipeline.dedup import ngram_jaccard_pairs
     df = spark.createDataFrame(

@@ -214,6 +214,12 @@ def empty_graph(spark) -> Graph:
     return g
 
 
+def _tx_time(tx: int) -> datetime.datetime:
+    """The time of tx ``tx`` when its writer gives none: day ``tx``
+    after 2000-01-01, so tx times increase with tx numbers."""
+    return datetime.datetime(2000, 1, 1) + datetime.timedelta(days=tx)
+
+
 def transact(g: Graph, wishes: list, time=None,
              check_schema: bool = False) -> tuple[Graph, dict]:
     """Apply wishes atomically as tx = max_tx + 1; returns (new graph,
@@ -231,22 +237,16 @@ def _transact(g: Graph, wishes: list, time,
     """``transact`` that also returns the tx's ``TxDelta``."""
     spark = g.spark
     if check_schema:
-        validator = getattr(g, "schema_validator", None)
-        if validator is None:
+        if g.schema_validator is None:
             raise ValueError(
                 "check_schema=True but graph has no schema_validator")
-        validator(wishes, g)
+        g.schema_validator(wishes, g)
     tx = g.max_tx() + 1
-    time = time or datetime.datetime(2000, 1, 1) + datetime.timedelta(days=tx)
+    time = time or _tx_time(tx)
 
-    # max-RAE-id: cached on the Graph by the previous transact so a
-    # write chain costs ZERO id-scan jobs after the first (VERDICT r1:
-    # two full-lineage collects per transact)
-    cached = getattr(g, "_max_rae_id", None)
-    if cached is None:
-        max_id = (g.nodes.select(F.max("id")).collect()[0][0] or 0)
-        max_eid = (g.edges.select(F.max("id")).collect()[0][0] or 0)
-        cached = max(max_id, max_eid)
+    # the id floor is chained from the previous transact, so a write
+    # chain costs ZERO id-scan jobs after the first
+    cached = g.max_rae_id()
     ids = itertools.count(max(cached, 1 << 60) + 1)
     last_minted = cached
 
@@ -487,13 +487,13 @@ def _transact(g: Graph, wishes: list, time,
     # chain the id high-water mark: the next transact mints ids with
     # no Spark job at all
     out._max_rae_id = max(last_minted, 1 << 60)
-    out.schema_validator = getattr(g, "schema_validator", None)
+    out.schema_validator = g.schema_validator
     # merge this tx's write-time VRTs into the registry; every other
     # fact goes: ids minted here carry no type code, a re-assign
     # supersedes, a terminate closes nodes but not their attr rows
     out.catalog = GraphCatalog(
         rt_vrt=g.catalog.merged_vrts(tx_vrts.items()))
-    out.interactive = getattr(g, "interactive", False)
+    out.interactive = g.interactive
     delta = TxDelta(tx, new_nodes, new_edges, new_avs, new_txs, new_tags,
                     set(supersede_aes), tset, set(close_tags))
     return out, receipt, delta

@@ -119,6 +119,8 @@ class Graph:
         # round trips PER lookup. Parquet/mapper graphs keep the
         # planner's choice (a non-selective value could be huge).
         self.interactive = False
+        # frames below this tx are refused (set by graph/vacuum.py)
+        self.vacuum_horizon = None
 
     @property
     def spark(self):
@@ -130,6 +132,15 @@ class Graph:
                    else self.txs.agg(F.max("tx_id")))
             self._max_tx = src.collect()[0][0]
         return self._max_tx
+
+    def max_rae_id(self) -> int:
+        """Highest node or edge id: the floor every write mints above.
+        Writers chain it, so only a graph no writer built probes."""
+        if self._max_rae_id is None:
+            self._max_rae_id = max(
+                self.nodes.select(F.max("id")).collect()[0][0] or 0,
+                self.edges.select(F.max("id")).collect()[0][0] or 0)
+        return self._max_rae_id
 
     def now(self) -> "GraphSlice":
         return GraphSlice(self, self.max_tx())
@@ -279,7 +290,7 @@ class GraphSlice:
     _zef_graph_kind = True
 
     def __init__(self, graph: Graph, tx: int):
-        horizon = getattr(graph, "vacuum_horizon", None)
+        horizon = graph.vacuum_horizon
         if horizon is not None and tx < horizon:
             raise ValueError(
                 f"frame tx={tx} is below the vacuum horizon "
@@ -415,8 +426,7 @@ class NodeSet:
         # notes; materialize_bucketed dual_projection) — same rows,
         # bucketed/sorted by dst_id so the probe co-locates
         src = (g.edges_dst if direction == "in"
-               and getattr(g, "edges_dst", None) is not None
-               else g.edges)
+               and g.edges_dst is not None else g.edges)
         e = _alive(src, t)
         if rt is not None:
             e = e.where(F.col("rt") == _rt_name(rt))
@@ -474,8 +484,7 @@ class NodeSet:
 
     def in_rels(self, rt=None) -> "EdgeSet":
         g, t = self.frame.graph, self.frame.tx
-        src = (g.edges_dst if getattr(g, "edges_dst", None) is not None
-               else g.edges)
+        src = g.edges_dst if g.edges_dst is not None else g.edges
         e = _alive(src, t)
         if rt is not None:
             e = e.where(F.col("rt") == _rt_name(rt))
@@ -725,8 +734,7 @@ class NodeSet:
             return NodeSet(self.frame,
                            self.df.join(owners, "id", "left_semi"))
         ae_ids = av.where(cond).select(F.col("ae_id").alias("__ae"))
-        bc = F.broadcast if getattr(g, "interactive", False) \
-            else (lambda d: d)
+        bc = F.broadcast if g.interactive else (lambda d: d)
         e = _alive(g.edges, t).where(F.col("rt") == name) \
             .select(F.col("src_id").alias("id"),
                     F.col("dst_id").alias("__ae"))

@@ -25,10 +25,13 @@ shared storage (the shape Delta Lake's transaction log made standard):
   base ∪ segment appends, with closures applied as ONE broadcast
   join per table (segments are wish-sized — control-plane volume;
   bulk data enters through graph/mapper.py or the distributed
-  streaming ingest, not through wishes). Every segment also records
-  the head's catalog facts as of its tx (``catalog.json``: the rt→VRT
-  registry and ``single_assignment``), and the rebuilt head takes the
-  newest one, so it knows every field name a segment stored.
+  streaming ingest, not through wishes). A segment holds one
+  directory per non-empty table (rows, or closures of stored rows),
+  plus the head's catalog facts as of its tx (``catalog.json``: the
+  rt→VRT registry and ``single_assignment``) and the id floor later
+  writes mint above (``idmax.json``); a compaction checkpoint also
+  names its folded base (``checkpoint.json``). The rebuilt head takes
+  the newest catalog, so it knows every field name a segment stored.
 
 Any number of processes (or Spark drivers) pointing at the same path
 observe the same serializable tx chain; a reader is never blocked by
@@ -62,7 +65,6 @@ migrate postures mid-history.
 
 from __future__ import annotations
 
-import datetime
 import functools
 import json
 import os
@@ -71,7 +73,7 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .delta import TxDelta, _arrow_table, _local_df, _transact
+from .delta import TxDelta, _arrow_table, _local_df, _transact, _tx_time
 from .graph import Graph, GraphCatalog
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TAGS_SCHEMA, TXS_SCHEMA)
@@ -79,24 +81,28 @@ from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
 _SEG_FMT = "{:012d}"
 
 
-def _close_schema(key: str, key_type, from_col: str) -> T.StructType:
-    return T.StructType([T.StructField(key, key_type),
-                         T.StructField(from_col, T.LongType()),
-                         T.StructField("__closed_at", T.LongType())])
+# data table -> (its closure table, key columns, close column). A
+# closure row is (key columns, closing tx) of a row stored before the
+# tx; txs rows are never closed.
+_CLOSES = {
+    "nodes": ("node_closures", ["id", "valid_from_tx"], "valid_to_tx"),
+    "edges": ("edge_closures", ["id", "valid_from_tx"], "valid_to_tx"),
+    "attr_values": ("av_closures", ["ae_id", "assigned_at_tx"],
+                    "superseded_at_tx"),
+    "tags": ("tag_closures", ["name", "valid_from_tx"], "valid_to_tx"),
+}
 
-
-# segment table -> schema of its rows; a closure row is (key, from-tx,
-# closing tx) of a row stored before the tx
+# segment table -> schema of its rows
 _SEG_SCHEMAS = {
     "nodes": NODES_SCHEMA, "edges": EDGES_SCHEMA,
     "attr_values": ATTR_VALUES_SCHEMA, "txs": TXS_SCHEMA,
     "tags": TAGS_SCHEMA,
-    "node_closures": _close_schema("id", T.LongType(), "valid_from_tx"),
-    "edge_closures": _close_schema("id", T.LongType(), "valid_from_tx"),
-    "av_closures": _close_schema("ae_id", T.LongType(), "assigned_at_tx"),
-    "tag_closures": _close_schema("name", T.StringType(),
-                                  "valid_from_tx"),
 }
+_SEG_SCHEMAS.update({
+    cl: T.StructType([T.StructField(c, _SEG_SCHEMAS[t][c].dataType)
+                      for c in keys]
+                     + [T.StructField("__closed_at", T.LongType())])
+    for t, (cl, keys, _) in _CLOSES.items()})
 
 
 def _write_table(seg: str, name: str, rows: list) -> None:
@@ -111,17 +117,18 @@ def _write_table(seg: str, name: str, rows: list) -> None:
                    store_schema=False)
 
 
-def _tx_row(tx: int) -> tuple:
-    return (tx, datetime.datetime(2000, 1, 1) + datetime.timedelta(days=tx))
+def _dump(seg: str, name: str, obj) -> None:
+    with open(os.path.join(seg, name), "w") as f:
+        json.dump(obj, f)
 
 
-def _write_catalog(seg: str, cat: GraphCatalog) -> None:
-    """The catalog facts of the head as of segment ``seg``'s tx, for
-    ``_build``: the rt→VRT registry (every name and VRT the segment
-    wrote merged in) and whether it is still single_assignment."""
-    with open(os.path.join(seg, "catalog.json"), "w") as f:
-        json.dump({"rt_vrt": cat.rt_vrt,
-                   "single_assignment": cat.single_assignment}, f)
+def _load(seg: str, name: str):
+    """JSON file ``name`` of ``seg``, or None when it has none."""
+    p = os.path.join(seg, name)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
 
 
 def _closures(before: Graph, d: TxDelta) -> dict[str, list]:
@@ -130,27 +137,19 @@ def _closures(before: Graph, d: TxDelta) -> dict[str, list]:
     the closed ids; a tx that closes no stored row runs none."""
     minted = {r[0] for r in d.nodes} | {r[0] for r in d.edges}
     ended = d.terminated - minted
+    closed = {"nodes": ended, "edges": ended,
+              "attr_values": d.closed_aes, "tags": d.closed_tags}
     parts: list[DataFrame] = []
-
-    def keys(name, df, key, from_col, close_col, among):
+    for t, (cl, (key, from_col), close_col) in _CLOSES.items():
+        df = getattr(before, t)
+        if not closed[t] or df is None:
+            continue
         # ids and tag names share one string column, so every part
         # unions into the single query
         k = F.col(key)
-        parts.append(df.where(k.isin(among) & F.col(close_col).isNull())
-                     .select(F.lit(name).alias("t"),
+        parts.append(df.where(k.isin(closed[t]) & F.col(close_col).isNull())
+                     .select(F.lit(cl).alias("t"),
                              k.cast("string").alias("k"), from_col))
-
-    if ended:
-        keys("node_closures", before.nodes, "id", "valid_from_tx",
-             "valid_to_tx", ended)
-        keys("edge_closures", before.edges, "id", "valid_from_tx",
-             "valid_to_tx", ended)
-    if d.closed_aes:
-        keys("av_closures", before.attr_values, "ae_id", "assigned_at_tx",
-             "superseded_at_tx", d.closed_aes)
-    if d.closed_tags and before.tags is not None:
-        keys("tag_closures", before.tags, "name", "valid_from_tx",
-             "valid_to_tx", d.closed_tags)
     out: dict[str, list] = {}
     if parts:
         for t, k, frm in functools.reduce(DataFrame.union,
@@ -312,23 +311,17 @@ class GraphStore:
         The base graph's max_tx seeds the tx chain."""
         os.makedirs(os.path.join(path, "txlog"), exist_ok=True)
         g.materialize(os.path.join(path, "base"))
-        meta = {"base_max_tx": g.max_tx(),
-                "rt_vrt": g.catalog.rt_vrt,
-                "single_assignment": g.catalog.single_assignment,
-                # id floor of the base: every later commit (wish OR
-                # mapped) must mint RAE ids above this. A mapper-built
-                # base carries its arithmetic-band bound here; without
-                # it a wish id could equal the id a later mapped batch
-                # deterministically mints for its next key.
-                "base_id_floor": getattr(g, "_max_rae_id", None) or 0}
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        store = cls(g.spark, path, protocol=protocol)
-        return store
-
-    def _meta(self) -> dict:
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
+        _dump(path, "meta.json", {
+            "base_max_tx": g.max_tx(),
+            "rt_vrt": g.catalog.rt_vrt,
+            "single_assignment": g.catalog.single_assignment,
+            # id floor of the base: every later commit (wish OR
+            # mapped) must mint RAE ids above this. A mapper-built
+            # base carries its arithmetic-band bound here; without
+            # it a wish id could equal the id a later mapped batch
+            # deterministically mints for its next key.
+            "base_id_floor": g._max_rae_id or 0})
+        return cls(g.spark, path, protocol=protocol)
 
     # -- read side ----------------------------------------------------
 
@@ -348,31 +341,23 @@ class GraphStore:
 
     def _build(self, segs: list[tuple[int, str]]) -> Graph:
         spark = self.spark
-        meta = self._meta()
+        meta = _load(self.path, "meta.json")
+        # start from the newest checkpoint at or below the head: a
+        # checkpoint segment folds all earlier history into a fresh
+        # base snapshot (Delta-checkpoint shape), so rebuild cost is
+        # O(segments since last compact), not O(all history). Its own
+        # (empty) tx row is not in its folded base; it is read below
+        # with the later segments' rows, so the txs stay gapless.
+        base, start = os.path.join(self.path, "base"), -1
+        for tx, sp in segs:
+            if (ck := _load(sp, "checkpoint.json")) is not None:
+                base, start = os.path.join(self.path, ck["base"]), tx
         # id floor = max over the base's floor and every segment's
         # recorded high-water mark (wish segments record their last
         # minted id; mapped segments record the mapping's band bound
         # max_payload_id). The rebuilt head inherits it so transact in
         # ANY process mints above every band ever committed here.
         id_floor = meta.get("base_id_floor", 0) or 0
-        for _, sp in segs:
-            im = os.path.join(sp, "idmax.json")
-            if os.path.exists(im):
-                with open(im) as f:
-                    id_floor = max(id_floor, json.load(f)["idmax"])
-        # start from the newest checkpoint at or below the head: a
-        # checkpoint segment folds all earlier history into a fresh
-        # base snapshot (Delta-checkpoint shape), so rebuild cost is
-        # O(segments since last compact), not O(all history)
-        base = os.path.join(self.path, "base")
-        start, ck_seg = 0, None
-        top_tx = segs[-1][0] if segs else meta["base_max_tx"]
-        for tx, sp in segs:
-            ck = os.path.join(sp, "checkpoint.json")
-            if os.path.exists(ck):
-                with open(ck) as f:
-                    base = os.path.join(self.path, json.load(f)["base"])
-                start, ck_seg = tx, sp
         # the catalog is the newest recorded one: the checkpoint's or a
         # later segment's. A segment that records none (written before
         # segments recorded theirs) leaves the names it stored unknown,
@@ -380,100 +365,65 @@ class GraphStore:
         cat = GraphCatalog(
             rt_vrt=meta.get("rt_vrt"),
             single_assignment=bool(meta.get("single_assignment")))
-        for t, sp in segs:
-            if t < start:
+        parts: dict[str, list] = {name: [] for name in _SEG_SCHEMAS}
+        for tx, sp in segs:
+            if (im := _load(sp, "idmax.json")) is not None:
+                id_floor = max(id_floor, im["idmax"])
+            if tx < start:
                 continue
-            cp = os.path.join(sp, "catalog.json")
-            if os.path.exists(cp):
-                with open(cp) as f:
-                    cat = GraphCatalog(**json.load(f))
-            else:
-                cat = GraphCatalog()
-        segs = [(t, p) for t, p in segs if t > start]
+            c = _load(sp, "catalog.json")
+            cat = GraphCatalog(**c) if c is not None else GraphCatalog()
+            for name, schema in _SEG_SCHEMAS.items():
+                if os.path.exists(p := os.path.join(sp, name)):
+                    parts[name].append(spark.read.schema(schema).parquet(p))
         g = Graph.load(spark, base)
-
-        def rd(seg_path, name, schema):
-            p = os.path.join(seg_path, name)
-            if os.path.exists(p):
-                return spark.read.schema(schema).parquet(p)
-            return None
-
-        def apply(table, key_cols, close_col, news, closes):
-            for n in news:
+        tables = {"nodes": g.nodes, "edges": g.edges,
+                  "attr_values": g.attr_values, "txs": g.txs,
+                  "tags": g.tags}
+        for t, table in tables.items():
+            cl, keys, close_col = _CLOSES.get(t, (None, None, None))
+            closes = parts.get(cl, [])
+            if not parts[t] and not closes:
+                continue
+            if table is None:
+                table = _local_df(spark, [], TAGS_SCHEMA)
+            for n in parts[t]:
                 table = table.unionByName(n)
             if closes:
-                cl = closes[0]
-                for c in closes[1:]:
-                    cl = cl.unionByName(c)
-                cl = cl.groupBy(*key_cols).agg(
-                    F.min("__closed_at").alias("__closed_at"))
-                table = (table.join(F.broadcast(cl), key_cols, "left")
+                # ONE broadcast join applies every segment's closures
+                cl_df = functools.reduce(DataFrame.unionByName, closes) \
+                    .groupBy(*keys).agg(
+                        F.min("__closed_at").alias("__closed_at"))
+                table = (table.join(F.broadcast(cl_df), keys, "left")
                          .withColumn(close_col,
-                                     F.coalesce(close_col,
-                                                "__closed_at"))
+                                     F.coalesce(close_col, "__closed_at"))
                          .drop("__closed_at"))
-            return table
-
-        n_new, n_cl, e_new, e_cl, a_new, a_cl, t_new = \
-            [], [], [], [], [], [], []
-        tg_new, tg_cl = [], []
-        if ck_seg is not None:
-            # the checkpoint's own (empty) tx row isn't in its folded
-            # base — carry it so the txs dimension stays gapless
-            if (x := rd(ck_seg, "txs", TXS_SCHEMA)) is not None:
-                t_new.append(x)
-        close_schema = "id long, valid_from_tx long, __closed_at long"
-        av_close_schema = ("ae_id long, assigned_at_tx long, "
-                          "__closed_at long")
-        for _, sp in segs:
-            if (x := rd(sp, "nodes", NODES_SCHEMA)) is not None:
-                n_new.append(x)
-            if (x := rd(sp, "edges", EDGES_SCHEMA)) is not None:
-                e_new.append(x)
-            if (x := rd(sp, "attr_values",
-                        ATTR_VALUES_SCHEMA)) is not None:
-                a_new.append(x)
-            if (x := rd(sp, "txs", TXS_SCHEMA)) is not None:
-                t_new.append(x)
-            p = os.path.join(sp, "node_closures")
-            if os.path.exists(p):
-                n_cl.append(spark.read.schema(close_schema).parquet(p))
-            p = os.path.join(sp, "edge_closures")
-            if os.path.exists(p):
-                e_cl.append(spark.read.schema(close_schema).parquet(p))
-            p = os.path.join(sp, "av_closures")
-            if os.path.exists(p):
-                a_cl.append(spark.read.schema(av_close_schema)
-                            .parquet(p))
-            if (x := rd(sp, "tags", TAGS_SCHEMA)) is not None:
-                tg_new.append(x)
-            p = os.path.join(sp, "tag_closures")
-            if os.path.exists(p):
-                tg_cl.append(spark.read.schema(
-                    "name string, valid_from_tx long, __closed_at long"
-                ).parquet(p))
-        nodes = apply(g.nodes, ["id", "valid_from_tx"], "valid_to_tx",
-                      n_new, n_cl)
-        edges = apply(g.edges, ["id", "valid_from_tx"], "valid_to_tx",
-                      e_new, e_cl)
-        avs = apply(g.attr_values, ["ae_id", "assigned_at_tx"],
-                    "superseded_at_tx", a_new, a_cl)
-        txs = g.txs
-        for t in t_new:
-            txs = txs.unionByName(t)
-        tags = g.tags
-        if tg_new or tg_cl:
-            if tags is None:
-                tags = _local_df(spark, [], TAGS_SCHEMA)
-            tags = apply(tags, ["name", "valid_from_tx"],
-                         "valid_to_tx", tg_new, tg_cl)
-        out = Graph(nodes, edges, avs, txs, tags)
+            tables[t] = table
+        out = Graph(**tables)
         out.catalog = cat
-        out._max_tx = top_tx
+        out._max_tx = segs[-1][0] if segs else meta["base_max_tx"]
         out._max_rae_id = id_floor or None
         return out
 
     # -- write side ---------------------------------------------------
+
+    def _claim(self, seg: str, tx: int, cat: GraphCatalog,
+               idmax: int) -> bool:
+        """Seal segment ``seg`` and claim ``tx`` with it. Every segment
+        records the head's catalog facts as of its tx (the rt→VRT
+        registry with every name and VRT it wrote merged in, and
+        whether the head is still single_assignment) and the id floor
+        later writes must mint above. A lost claim discards ``seg``
+        and drops the head, so the caller retries on a re-listed one."""
+        _dump(seg, "catalog.json",
+              {"rt_vrt": cat.rt_vrt,
+               "single_assignment": cat.single_assignment})
+        _dump(seg, "idmax.json", {"idmax": idmax})
+        if self.protocol.claim(self.path, tx, seg):
+            return True
+        self.protocol.discard(self.path, tx, seg)
+        self._head = None
+        return False
 
     def commit(self, wishes: list, time=None,
                max_retries: int = 10) -> tuple[Graph, dict]:
@@ -481,27 +431,18 @@ class GraphStore:
         against a refreshed head when another process claims the tx
         number first (the atomic-rename race). Returns (head graph
         after commit, receipt)."""
-        last_err = None
         for _ in range(max_retries):
             g = self.refresh()
             g2, receipt, delta = _transact(g, wishes, time, False)
-            tx = delta.tx
             tmp = self.protocol.temp_segment(self.path)
             _write_delta(tmp, g, delta)
-            _write_catalog(tmp, g2.catalog)
-            with open(os.path.join(tmp, "idmax.json"), "w") as f:
-                json.dump({"idmax": g2._max_rae_id or 0}, f)
-            if not self.protocol.claim(self.path, tx, tmp):
-                self.protocol.discard(self.path, tx, tmp)
-                last_err = f"tx {tx} already claimed"
-                self._head = None             # force re-list
-                continue
-            self._head, self._head_seg = g2, tx
-            return g2, receipt
+            if self._claim(tmp, delta.tx, g2.catalog, g2._max_rae_id or 0):
+                self._head, self._head_seg = g2, delta.tx
+                return g2, receipt
         raise RuntimeError(
-            f"commit lost the tx-claim race {max_retries} times "
-            f"(last: {last_err}); the store is under heavy write "
-            "contention — batch wishes or add retries")
+            f"commit lost the tx-claim race {max_retries} times; the "
+            "store is under heavy write contention — batch wishes or "
+            "add retries")
 
     def compact(self, max_retries: int = 5) -> Graph:
         """Fold the current head (base + all segments) into a fresh
@@ -513,6 +454,7 @@ class GraphStore:
         wins the slot and compaction retries on the refreshed head.
         Old segments/bases are left for in-flight readers; delete them
         out-of-band once no reader can be older than the checkpoint."""
+        import shutil
         for _ in range(max_retries):
             g = self.refresh()
             tx = g.max_tx() + 1
@@ -520,25 +462,17 @@ class GraphStore:
             g.materialize(os.path.join(self.path, base_name))
             tmp = self.protocol.temp_segment(self.path)
             os.makedirs(tmp, exist_ok=True)
-            with open(os.path.join(tmp, "checkpoint.json"), "w") as f:
-                json.dump({"base": base_name}, f)
-            _write_catalog(tmp, g.catalog)
-            # carry the folded history's id floor: clean() may delete
-            # the pre-checkpoint segments whose idmax records it
-            with open(os.path.join(tmp, "idmax.json"), "w") as f:
-                json.dump({"idmax": g._max_rae_id or 0}, f)
+            _dump(tmp, "checkpoint.json", {"base": base_name})
             # the checkpoint claims tx; it carries no delta rows, but
             # max_tx must stay monotonic — record an empty tx row
-            _write_table(tmp, "txs", [_tx_row(tx)])
-            if not self.protocol.claim(self.path, tx, tmp):
-                import shutil
-                self.protocol.discard(self.path, tx, tmp)
-                shutil.rmtree(os.path.join(self.path, base_name),
-                              ignore_errors=True)
-                self._head = None
-                continue
-            self._head = None            # rebuild from the checkpoint
-            return self.refresh()
+            _write_table(tmp, "txs", [(tx, _tx_time(tx))])
+            # carry the folded history's id floor: clean() may delete
+            # the pre-checkpoint segments whose idmax records it
+            if self._claim(tmp, tx, g.catalog, g._max_rae_id or 0):
+                self._head = None        # rebuild from the checkpoint
+                return self.refresh()
+            shutil.rmtree(os.path.join(self.path, base_name),
+                          ignore_errors=True)
         raise RuntimeError("compact lost the tx-claim race repeatedly")
 
     def commit_mapped(self, batch_df, mapping,
@@ -557,39 +491,25 @@ class GraphStore:
         for _ in range(max_retries):
             g = self.refresh()
             tx = g.max_tx() + 1
-            node_parts, edge_parts, av_parts = mapped_parts(
-                batch_df, mapping, tx, batch_label=f"tx {tx}")
+            parts = mapped_parts(batch_df, mapping, tx,
+                                 batch_label=f"tx {tx}")
             tmp = self.protocol.temp_segment(self.path)
             os.makedirs(tmp, exist_ok=True)
-
-            def wr(parts, name):
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-                df.write.mode("overwrite") \
-                    .parquet(os.path.join(tmp, name))
-
-            wr(node_parts, "nodes")
-            if edge_parts:
-                wr(edge_parts, "edges")
-            if av_parts:
-                wr(av_parts, "attr_values")
-            _write_table(tmp, "txs", [_tx_row(tx)])
-            _write_catalog(tmp, _mapped_catalog(g.catalog, mapping,
-                                                batch_df))
+            for name, dfs in zip(("nodes", "edges", "attr_values"), parts):
+                if dfs:
+                    functools.reduce(DataFrame.unionByName, dfs).write \
+                        .mode("overwrite").parquet(os.path.join(tmp, name))
+            _write_table(tmp, "txs", [(tx, _tx_time(tx))])
             # record the mapping's band bound: wish commits in ANY
             # process (now or after restart) must mint above it, or a
             # wish id equals the arithmetic id this mapping mints for
             # its next sequential key (ADVICE r05)
-            with open(os.path.join(tmp, "idmax.json"), "w") as f:
-                json.dump({"idmax": max(mapping.max_payload_id,
-                                        g._max_rae_id or 0)}, f)
-            if not self.protocol.claim(self.path, tx, tmp):
-                self.protocol.discard(self.path, tx, tmp)
-                self._head = None
-                continue
-            self._head = None          # rebuild picks up the segment
-            return self.refresh()
+            if self._claim(tmp, tx,
+                           _mapped_catalog(g.catalog, mapping, batch_df),
+                           max(mapping.max_payload_id,
+                               g._max_rae_id or 0)):
+                self._head = None      # rebuild picks up the segment
+                return self.refresh()
         raise RuntimeError(
             f"commit_mapped lost the tx-claim race {max_retries} "
             "times; the store is under heavy write contention")
@@ -604,10 +524,8 @@ class GraphStore:
         segs = _seg_dirs(self.path)
         ck_tx, ck_base = None, None
         for tx, sp in segs:
-            ck = os.path.join(sp, "checkpoint.json")
-            if os.path.exists(ck):
-                with open(ck) as f:
-                    ck_tx, ck_base = tx, json.load(f)["base"]
+            if (ck := _load(sp, "checkpoint.json")) is not None:
+                ck_tx, ck_base = tx, ck["base"]
         if ck_tx is None:
             return []
         removed = []

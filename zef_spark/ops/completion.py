@@ -401,7 +401,7 @@ def _sync(g, *args):
     g.materialize(path)
     g2 = Graph.load(g.spark, path)
     g2.catalog = g.catalog
-    g2.schema_validator = getattr(g, "schema_validator", None)
+    g2.schema_validator = g.schema_validator
     return g2
 
 

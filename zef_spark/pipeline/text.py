@@ -292,16 +292,16 @@ def fingerprint(df: DataFrame, text_col: str,
     # higher-order transform: an expression referenced inside a lambda
     # is re-evaluated PER ELEMENT (no CSE inside interpreted HOFs), so
     # inlining the regexp would re-run it once per shingle — measured
-    # 6x on the fingerprint stage.
+    # 6x on the fingerprint stage. The output column holds it, since
+    # the fingerprint overwrites it anyway: no input column is lost.
     norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    tcol = F.col("__fp_norm")
+    tcol = F.col(out_col)
     n = F.greatest(F.length(tcol) - k + 1, F.lit(1))
     sh = F.transform(F.sequence(F.lit(1), n),
                      lambda i: F.substring(tcol, i, k))
     h = F.xxhash64 if hash_fn == "xxhash64" else F.md5
-    return (df.withColumn("__fp_norm", norm)
-            .withColumn(out_col, h(F.array_min(sh)))
-            .drop("__fp_norm"))
+    return (df.withColumn(out_col, norm)
+            .withColumn(out_col, h(F.array_min(sh))))
 
 
 # PII patterns chosen to parse identically under Java regex (Spark)

@@ -25,41 +25,61 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from ..graph.delta import E, SetField, transact
+from ..graph.delta import E, SetField, _local_df, _tx_time, transact
 from ..graph.graph import Graph, GraphCatalog
+from ..graph.schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA,
+                            ID_KEY_BITS, NODES_SCHEMA, TXS_SCHEMA)
 from ..tokens import ET
 
+# A mapped stream cuts the lineage of its four tables with a
+# localCheckpoint every this many batches. Each batch adds one union
+# branch per table, so without a cut planning a read grows with the
+# stream's length; each cut costs one job per table. At 16 the cut
+# adds a quarter job per batch, and a short stream (the benchmark's 8
+# batches) never pays it.
+_CHECKPOINT_EVERY = 16
 
-class StreamTransactor:
-    """Holds the evolving graph across micro-batches. `graph` is
-    always the latest committed slice."""
+
+class _LedgerSink:
+    """A foreachBatch sink that applies each micro-batch as one tx of
+    ``graph`` (always the latest committed graph) and skips replays.
+    The applied-batch ledger rides on the graph as one
+    ZefSparkStreamBatch entity per batch, whose ``batch_key`` is
+    written in the same tx as the batch's payload."""
 
     LEDGER_ET = ET.ZefSparkStreamBatch
 
-    def __init__(self, g: Graph, wish_fn: Callable, stream_id: str):
+    def __init__(self, g: Graph, stream_id: str):
         self.graph = g
-        self.wish_fn = wish_fn
         self.stream_id = stream_id
-        self._applied = self._load_ledger(g)
-
-    def _load_ledger(self, g: Graph) -> set:
         if g.nodes.isEmpty():
-            return set()
-        # public field reader: (id, value) rows for the ledger type's
-        # batch_key attribute in the current frame
-        vals = g.now().all(self.LEDGER_ET).field("batch_key")
-        return {r[1] for r in vals.collect()}
+            self._applied = set()
+        else:
+            # public field reader: (id, value) rows for the ledger
+            # type's batch_key attribute in the current frame
+            vals = g.now().all(self.LEDGER_ET).field("batch_key")
+            self._applied = {r[1] for r in vals.collect()}
 
-    def _batch_key(self, batch_id: int) -> str:
-        return f"{self.stream_id}:{batch_id}"
+    def _new_key(self, batch_id: int) -> str | None:
+        """The ledger key of ``batch_id``; None if it was applied."""
+        key = f"{self.stream_id}:{batch_id}"
+        return None if key in self._applied else key
+
+
+class StreamTransactor(_LedgerSink):
+    """Sink that maps each micro-batch's rows to wishes on the driver."""
+
+    def __init__(self, g: Graph, wish_fn: Callable, stream_id: str):
+        super().__init__(g, stream_id)
+        self.wish_fn = wish_fn
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> bool:
         """foreachBatch hook. Returns True if the batch was applied,
         False if the ledger says it already was (replay)."""
-        key = self._batch_key(batch_id)
-        if key in self._applied:
+        key = self._new_key(batch_id)
+        if key is None:
             return False
         rows = batch_df.collect()
         wishes = list(self.wish_fn(rows))
@@ -85,7 +105,6 @@ class BatchEntityMap:
 
     def __init__(self, et, key_col: str, type_code: int,
                  fields: dict[str, int], uid_prefix: str | None = None):
-        from ..graph.schema import ID_KEY_BITS
         # the int64 overflow bound (same as mapper._mkid): every code
         # incl. the +1 attr-edge code must fit above the key bits
         cap = 1 << (63 - ID_KEY_BITS)
@@ -120,9 +139,7 @@ def mapped_parts(batch_df: DataFrame, m: BatchEntityMap, tx: int,
     (multi-process bulk commits). Entirely DataFrame selects with
     deterministic arithmetic ids; the only driver work is a 1-row
     key-range probe."""
-    from pyspark.sql import functions as F
     from ..graph.mapper import _SPARK_TO_VRT
-    from ..graph.schema import ID_KEY_BITS
 
     def mkid(code: int, c):
         assert 0 < code < (1 << (63 - ID_KEY_BITS))
@@ -198,7 +215,7 @@ def mapped_parts(batch_df: DataFrame, m: BatchEntityMap, tx: int,
     return node_parts, edge_parts, av_parts
 
 
-class MappedStreamTransactor:
+class MappedStreamTransactor(_LedgerSink):
     """Distributed foreachBatch sink: one micro-batch == one atomic tx,
     with the PAYLOAD mapped to nodes/edges/attr_values rows entirely
     as DataFrame selects — no driver-side row materialization (the
@@ -226,57 +243,34 @@ class MappedStreamTransactor:
     each value's owner arithmetically from its AE id, with no edge scan
     and no edge join.
 
-    ``checkpoint_every``: localCheckpoint the four tables every N
-    batches so a long-running stream doesn't accrete an unbounded
+    Every ``_CHECKPOINT_EVERY``-th batch localCheckpoints the four
+    tables, so a long-running stream does not accrete an unbounded
     union lineage."""
 
-    LEDGER_ET = StreamTransactor.LEDGER_ET
-
-    def __init__(self, g: Graph, mapping: BatchEntityMap,
-                 stream_id: str, checkpoint_every: int = 16):
-        self.graph = g
+    def __init__(self, g: Graph, mapping: BatchEntityMap, stream_id: str):
+        super().__init__(g, stream_id)
         self.mapping = mapping
-        self.stream_id = stream_id
-        self.checkpoint_every = checkpoint_every
-        self._applied = StreamTransactor._load_ledger(self, g)
         self._n_applied = 0
 
-    def _batch_key(self, batch_id: int) -> str:
-        return f"{self.stream_id}:{batch_id}"
-
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> bool:
-        import datetime
-        from pyspark.sql import functions as F
-        from ..graph.delta import _local_df
-        from ..graph.schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA,
-                                    NODES_SCHEMA, TXS_SCHEMA)
-        key = self._batch_key(batch_id)
-        if key in self._applied:
+        key = self._new_key(batch_id)
+        if key is None:
             return False
         g, m = self.graph, self.mapping
         spark = g.spark
         tx = g.max_tx() + 1
-        time = (datetime.datetime(2000, 1, 1)
-                + datetime.timedelta(days=tx))
         node_parts, edge_parts, av_parts = mapped_parts(
             batch_df, m, tx, batch_label=str(batch_id))
 
         # ledger rows, built on the driver as local relations: entity
-        # + batch_key AE + attr edge + value row, all at tx
-        cached = getattr(g, "_max_rae_id", None)
-        if cached is None:
-            cached = max(
-                g.nodes.select(F.max("id")).collect()[0][0] or 0,
-                g.edges.select(F.max("id")).collect()[0][0] or 0)
-        # ledger ids mint above the wish floor AND above the whole
-        # payload id band, so no payload key can ever collide with a
-        # ledger row (codes ≥ 2^(60-K) reach past the 2^60 floor)
-        base = max(cached, 1 << 60, m.max_payload_id)
+        # + batch_key AE + attr edge + value row, all at tx. Their ids
+        # mint above the wish floor AND above the whole payload id
+        # band, so no payload key can ever collide with a ledger row
+        # (codes ≥ 2^(60-K) reach past the 2^60 floor)
+        base = max(g.max_rae_id(), 1 << 60, m.max_payload_id)
         led_ent, led_ae, led_edge = base + 1, base + 2, base + 3
-        et_name = (self.LEDGER_ET if isinstance(self.LEDGER_ET, str)
-                   else self.LEDGER_ET.name)
         node_parts.append(_local_df(spark, [
-            (led_ent, et_name, f"__ledger_{key}", tx, None),
+            (led_ent, self.LEDGER_ET.name, f"__ledger_{key}", tx, None),
             (led_ae, "AET.String", None, tx, None)], NODES_SCHEMA))
         edge_parts.append(_local_df(spark, [
             (led_edge, "batch_key", None, led_ent, led_ae, tx, None)],
@@ -294,15 +288,15 @@ class MappedStreamTransactor:
         avs = g.attr_values
         for p in av_parts:
             avs = avs.unionByName(p)
-        txs = g.txs.unionByName(_local_df(spark, [(tx, time)],
+        txs = g.txs.unionByName(_local_df(spark, [(tx, _tx_time(tx))],
                                           TXS_SCHEMA))
         out = Graph(nodes, edges, avs, txs, g.tags)
         out._max_tx = tx
         out._max_rae_id = led_edge
-        out.schema_validator = getattr(g, "schema_validator", None)
+        out.schema_validator = g.schema_validator
         out.catalog = _mapped_catalog(g.catalog, m, batch_df)
         self._n_applied += 1
-        if self._n_applied % self.checkpoint_every == 0:
+        if self._n_applied % _CHECKPOINT_EVERY == 0:
             out.nodes = out.nodes.localCheckpoint()
             out.edges = out.edges.localCheckpoint()
             out.attr_values = out.attr_values.localCheckpoint()
@@ -346,22 +340,27 @@ def _mapped_catalog(cat: GraphCatalog, m: BatchEntityMap,
         field_owner_code=owners)
 
 
+def _run(sink: _LedgerSink, stream_df: DataFrame, once: bool,
+         checkpoint: str | None):
+    writer = stream_df.writeStream.foreachBatch(sink.apply_batch)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if once:
+        writer.trigger(availableNow=True).start().awaitTermination()
+        return sink
+    return sink, writer.start()
+
+
 def stream_transact_mapped(g: Graph, stream_df: DataFrame,
                            mapping: BatchEntityMap,
                            stream_id: str = "s1", once: bool = True,
                            checkpoint: str | None = None):
     """Distributed counterpart of stream_transact: payload rows map to
     graph rows as DataFrame selects (MappedStreamTransactor), never
-    through the driver. Same return convention."""
-    st = MappedStreamTransactor(g, mapping, stream_id)
-    writer = stream_df.writeStream.foreachBatch(st.apply_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return st
-    return st, writer.start()
+    through the driver; every 16th batch cuts the tables' lineage
+    (``_CHECKPOINT_EVERY``). Same return convention."""
+    return _run(MappedStreamTransactor(g, mapping, stream_id),
+                stream_df, once, checkpoint)
 
 
 def stream_transact(g: Graph, stream_df: DataFrame,
@@ -372,12 +371,5 @@ def stream_transact(g: Graph, stream_df: DataFrame,
     once=True drains everything available then stops (test mode) and
     returns the StreamTransactor (read `.graph` for the result);
     otherwise returns (StreamTransactor, StreamingQuery)."""
-    st = StreamTransactor(g, wish_fn, stream_id)
-    writer = stream_df.writeStream.foreachBatch(st.apply_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return st
-    return st, writer.start()
+    return _run(StreamTransactor(g, wish_fn, stream_id), stream_df, once,
+                checkpoint)
