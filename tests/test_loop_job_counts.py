@@ -21,6 +21,7 @@ non-empty table.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from zef_spark import ET, RT
 from zef_spark.graph.algorithms import bfs_levels, k_core, \
@@ -161,6 +162,15 @@ def _one_file_batch(spark):
         .coalesce(1)
 
 
+def _four_partition_batch(spark):
+    # a first partition without a bad key costs a LIMIT 1 probe a
+    # second job, a global aggregate an AQE map stage
+    return spark.range(0, 40, numPartitions=4).select(
+        F.col("id").alias("event_id"),
+        F.concat(F.lit("t"), (F.col("id") % 3).cast("string"))
+        .alias("event_type"), F.col("id").cast("double").alias("value"))
+
+
 def test_mapped_batch_jobs(spark, store):
     st, _ = store
     g = st.refresh()
@@ -181,3 +191,39 @@ def test_store_commit_mapped_jobs(spark, store):
                     "store-jobs-commit-mapped")
     assert head.max_tx() == 2
     assert n <= 4
+
+
+def test_mapped_batch_jobs_four_partitions(spark, store):
+    st, _ = store
+    sink = MappedStreamTransactor(st.refresh(), _EVENT_MAP, "s1")
+    batch = _four_partition_batch(spark)
+    assert batch.rdd.getNumPartitions() == 4
+    n, applied = _jobs(spark, lambda: sink.apply_batch(batch, 0),
+                       "mapped-batch-jobs-4")
+    assert applied and sink.graph.max_tx() == 2
+    assert n <= 1
+
+
+def test_store_commit_mapped_jobs_four_partitions(spark, store):
+    st, _ = store
+    st.refresh()
+    batch = _four_partition_batch(spark)
+    n, head = _jobs(spark, lambda: st.commit_mapped(batch, _EVENT_MAP),
+                    "store-jobs-commit-mapped-4")
+    assert head.max_tx() == 2
+    assert head.now().all(ET.StreamEvent).df.count() == 40
+    assert n <= 4
+
+
+def test_mapped_key_probe_names_the_key(spark, store):
+    st, _ = store
+    bad = spark.range(0, 40, numPartitions=4).select(
+        F.when(F.col("id") == 37, -1).otherwise(F.col("id"))
+        .alias("event_id"),
+        F.lit("t").alias("event_type"), F.lit(1.0).alias("value"))
+    sink = MappedStreamTransactor(st.refresh(), _EVENT_MAP, "s1")
+    with pytest.raises(ValueError, match=r"3: key event_id=-1 out of"):
+        sink.apply_batch(bad, 3)
+    with pytest.raises(ValueError, match=r"key event_id=-1 out of"):
+        st.commit_mapped(bad, _EVENT_MAP)
+    assert st.refresh().max_tx() == 1 and sink.graph.max_tx() == 1

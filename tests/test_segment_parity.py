@@ -195,3 +195,45 @@ def test_second_store_reads_mapped_segment_and_checkpoint(spark, tmp_path):
                                     "batch_key": "String"}
     assert other._max_rae_id == h4._max_rae_id
     assert other._max_rae_id > m.max_payload_id
+
+
+def _plan_sizes(df):
+    """(length, widest line) of ``df``'s optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(plan), max(map(len, plan.splitlines()))
+
+
+def test_commit_chain_reads_and_linear_plan(spark, tmp_path):
+    """16 chained commits, each assigning a field, terminating an entity
+    with a cascade over its two edges and re-tagging: ``fields()`` of
+    the in-memory head equals a rebuilt head's at ``now`` and at tx-8.
+    Under an alive-field filter, the close expression of the oldest
+    rows nests one close per later tx, so the widest line of the
+    optimized plan grows linearly with the chain, and the plan (one
+    union branch per tx) as its square. A close that names its column
+    twice (``when(... & col IS NULL, tx).otherwise(col)``) doubles at
+    every tx."""
+    n = 16
+    g0, r0 = transact(empty_graph(spark), [
+        E(ET.Person, f"p{i}", fields={"age": i, "nick": f"n{i}"})
+        for i in range(n + 1)] + [
+        R(f"p{i}", RT.Knows, f"p{i + 1}") for i in range(n)])
+    store = GraphStore.init(g0, str(tmp_path / "store"))
+    sizes = {}
+    for i in range(n):
+        head, _ = store.commit([Assign(r0[f"p{i + 1}"], "age", 100 + i),
+                                Terminate(r0[f"p{i}"]),
+                                Tag("t", r0[f"p{i + 1}"])])
+        k = i + 1
+        if k in (4, 8, 16):
+            sizes[k] = _plan_sizes(
+                head.attr_values.where("superseded_at_tx IS NULL"))
+        if k in (8, 16):        # fail before a doubling plan gets slow
+            (total, wide), (total2, wide2) = sizes[k // 2], sizes[k]
+            assert wide2 <= 2 * wide and total2 <= 4 * total, sizes
+    rebuilt = GraphStore(spark, store.path).refresh()
+    for tx in (head.max_tx(), head.max_tx() - 8):
+        got = head.at(tx).all(ET.Person).fields("age", "nick")
+        want = rebuilt.at(tx).all(ET.Person).fields("age", "nick")
+        assert _rows(got) == _rows(want), tx
+    assert _slice(head, head.max_tx()) == _slice(rebuilt, head.max_tx())

@@ -25,7 +25,7 @@ from dataclasses import dataclass, field as dc_field
 from typing import Any
 
 import pyarrow as pa
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
@@ -194,6 +194,16 @@ def _local_df(spark, rows, schema):
                    len(rows) // 50_000 + 1))
     return spark.createDataFrame(_arrow_table(rows, schema),
                                  schema).coalesce(n)
+
+
+def _close(df: DataFrame, col: str, cond, tx: int) -> DataFrame:
+    """``df`` with ``col`` set to ``tx`` on the open rows (``col`` NULL)
+    that ``cond`` selects. ``coalesce`` names ``col`` once, so a filter
+    on it pushed down a chain of these grows by one term per tx, where
+    a ``when(cond & col IS NULL, tx).otherwise(col)`` doubles at each
+    tx."""
+    return df.withColumn(col, F.coalesce(F.col(col),
+                                         F.when(cond, F.lit(tx))))
 
 
 def empty_graph(spark) -> Graph:
@@ -440,22 +450,13 @@ def _transact(g: Graph, wishes: list, time,
                       tx if ((i in tset or s in tset or d in tset)
                              and vt is None)
                       else vt) for (i, rt, uid, s, d, vf, vt) in new_edges]
-        nodes = nodes.withColumn(
-            "valid_to_tx",
-            F.when(F.col("id").isin(tset) & F.col("valid_to_tx").isNull(),
-                   F.lit(tx)).otherwise(F.col("valid_to_tx")))
-        edges = edges.withColumn(
-            "valid_to_tx",
-            F.when((F.col("id").isin(tset) | F.col("src_id").isin(tset)
-                    | F.col("dst_id").isin(tset))
-                   & F.col("valid_to_tx").isNull(),
-                   F.lit(tx)).otherwise(F.col("valid_to_tx")))
+        nodes = _close(nodes, "valid_to_tx", F.col("id").isin(tset), tx)
+        edges = _close(edges, "valid_to_tx",
+                       F.col("id").isin(tset) | F.col("src_id").isin(tset)
+                       | F.col("dst_id").isin(tset), tx)
     if supersede_aes:
-        avs = avs.withColumn(
-            "superseded_at_tx",
-            F.when(F.col("ae_id").isin(set(supersede_aes)) &
-                   F.col("superseded_at_tx").isNull(),
-                   F.lit(tx)).otherwise(F.col("superseded_at_tx")))
+        avs = _close(avs, "superseded_at_tx",
+                     F.col("ae_id").isin(set(supersede_aes)), tx)
 
     if new_nodes:
         nodes = nodes.unionByName(_local_df(spark, new_nodes, NODES_SCHEMA))
@@ -473,11 +474,8 @@ def _transact(g: Graph, wishes: list, time,
         if tags is None:
             tags = _local_df(spark, [], TAGS_SCHEMA)
         if close_tags:
-            tags = tags.withColumn(
-                "valid_to_tx",
-                F.when(F.col("name").isin(set(close_tags)) &
-                       F.col("valid_to_tx").isNull(),
-                       F.lit(tx)).otherwise(F.col("valid_to_tx")))
+            tags = _close(tags, "valid_to_tx",
+                          F.col("name").isin(set(close_tags)), tx)
         if new_tags:
             tags = tags.unionByName(
                 _local_df(spark, new_tags, TAGS_SCHEMA))

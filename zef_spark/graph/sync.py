@@ -479,20 +479,23 @@ class GraphStore:
                       max_retries: int = 10) -> Graph:
         """DISTRIBUTED bulk commit into the shared graph: map the
         batch to node/edge/attr rows as DataFrame selects
-        (streaming.ingest.mapped_parts — deterministic arithmetic
-        ids, payload never driver-materialized), write them straight
-        into a tx segment with distributed parquet writes, and claim
-        the tx with the same atomic rename as commit(). This is how
-        DATA-plane volume enters a multi-process graph; wish commits
-        stay the control plane. On a lost claim race the segment is
-        rewritten against the refreshed head's tx (the mapping's ids
-        are tx-independent, so retry is cheap and safe)."""
-        from ..streaming.ingest import _mapped_catalog, mapped_parts
+        (streaming.ingest.mapped_parts — the mapping a stream sink
+        reads through; deterministic arithmetic ids, payload never
+        driver-materialized), write them straight into a tx segment
+        with distributed parquet writes, and claim the tx with the
+        same atomic rename as commit(). This is how DATA-plane volume
+        enters a multi-process graph; wish commits stay the control
+        plane. The keys are probed once, with the stream sink's probe
+        (one job). On a lost claim race the segment is rewritten
+        against the refreshed head's tx (the mapping's ids are
+        tx-independent, so retry is cheap and safe)."""
+        from ..streaming.ingest import (_check_keys, _mapped_catalog,
+                                        mapped_parts)
+        _check_keys(batch_df, mapping, "commit_mapped")
         for _ in range(max_retries):
             g = self.refresh()
             tx = g.max_tx() + 1
-            parts = mapped_parts(batch_df, mapping, tx,
-                                 batch_label=f"tx {tx}")
+            parts = mapped_parts(batch_df, mapping, tx)
             tmp = self.protocol.temp_segment(self.path)
             os.makedirs(tmp, exist_ok=True)
             for name, dfs in zip(("nodes", "edges", "attr_values"), parts):

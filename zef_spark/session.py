@@ -56,6 +56,13 @@ _DEFAULTS = {
     # measured). Driver-side Python overhead, scale-independent —
     # error messages lose only the Python call-site line.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Compiled-class cache (a static conf, read at JVM start). Spark's
+    # 100 entries hold less than one pass of either perfbench workload
+    # (writes compiles ~136 classes, reads ~504), so every pass
+    # recompiled all of them. 600 is the smallest size measured to
+    # hold a reads pass: its next pass compiles 10-34 classes, against
+    # ~128 at 500 (CHANGES.md).
+    "spark.sql.codegen.cache.maxEntries": "600",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }

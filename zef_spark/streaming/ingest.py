@@ -23,7 +23,11 @@ lifting distributed, only the wish construction is driver-side.
 
 from __future__ import annotations
 
-from typing import Callable
+import functools
+import itertools
+import re
+import threading
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -34,11 +38,12 @@ from ..graph.schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA,
 from ..tokens import ET
 
 # A mapped stream cuts the lineage of its four tables with a
-# localCheckpoint every this many batches. Each batch adds one union
-# branch per table, so without a cut planning a read grows with the
-# stream's length; each cut costs one job per table. At 16 the cut
-# adds a quarter job per batch, and a short stream (the benchmark's 8
-# batches) never pays it.
+# localCheckpoint every this many batches. Each batch adds one branch
+# to the union of rows its next read maps (and each read one union
+# level per table), so without a cut planning a read grows with the
+# stream's length; each cut builds the graph and costs one job per
+# table. At 16 the cut adds a quarter job per batch, and a short stream
+# (the benchmark's 8 batches) never pays it.
 _CHECKPOINT_EVERY = 16
 
 
@@ -108,6 +113,8 @@ class BatchEntityMap:
         # the int64 overflow bound (same as mapper._mkid): every code
         # incl. the +1 attr-edge code must fit above the key bits
         cap = 1 << (63 - ID_KEY_BITS)
+        if "__tx" in (key_col, *fields):
+            raise ValueError("__tx names the tx column of mapped rows")
         codes = {key_col: type_code}
         for col, code in fields.items():
             if code % 2:
@@ -131,14 +138,47 @@ class BatchEntityMap:
         self.uid_prefix = uid_prefix or f"{self.et.lower()}-"
 
 
-def mapped_parts(batch_df: DataFrame, m: BatchEntityMap, tx: int,
-                 batch_label: str = "batch"):
-    """Map a batch of rows to (node_parts, edge_parts, av_parts)
-    DataFrame lists at tx — the distributed ingest kernel shared by
-    MappedStreamTransactor (streaming) and GraphStore.commit_mapped
-    (multi-process bulk commits). Entirely DataFrame selects with
-    deterministic arithmetic ids; the only driver work is a 1-row
-    key-range probe."""
+def _check_keys(batch_df: DataFrame, m: BatchEntityMap, label: str) -> None:
+    """Fail the batch NOW if a key is NULL or out of [0, 2^K): such a
+    key would alias into a neighboring id code band. The graph tables
+    are lazy, so the in-plan guard of ``map_rows`` would only fire at
+    the first read; this probe runs before any ledger mark. It is one
+    Spark job on any partition count: every row meets the guard in a
+    filter that keeps none, written to the ``noop`` sink (a LIMIT 1
+    takes a second job when the first partition is clean, a global
+    aggregate an AQE map stage). No row reaches the driver."""
+    k = F.col(m.key_col)
+    kl = k.cast("long")
+    bad = kl.isNull() | (kl < 0) | (kl >= F.lit(1 << ID_KEY_BITS))
+    head = f"{label}: key {m.key_col}="
+    tail = (f" out of [0, 2^{ID_KEY_BITS}) — would alias into a "
+            "neighboring id code band")
+    guard = F.when(bad, F.raise_error(F.concat(
+        F.lit(head), F.coalesce(k.cast("string"), F.lit("None")),
+        F.lit(tail)))).otherwise(F.lit(False))
+    try:
+        batch_df.where(guard).write.format("noop").mode("overwrite").save()
+    except Exception as e:
+        # the Spark error wraps the guard's message
+        found = re.search(re.escape(head) + ".*?" + re.escape(tail), str(e))
+        if found is None:
+            raise
+        raise ValueError(found.group(0)) from None
+
+
+def _tx_rows(batch_df: DataFrame, m: BatchEntityMap, tx: int) -> DataFrame:
+    """The batch's mapped columns and its tx: what ``map_rows`` reads."""
+    return batch_df.select(*dict.fromkeys([m.key_col, *m.fields]),
+                           F.lit(tx).cast("long").alias("__tx"))
+
+
+def map_rows(rows: DataFrame, m: BatchEntityMap):
+    """Map rows of ``(key, fields…, __tx)`` to (node_parts, edge_parts,
+    av_parts) DataFrame lists, each row valid from its ``__tx`` — the
+    distributed ingest kernel. ``rows`` may hold many batches, one
+    ``__tx`` each, so a mapped stream maps all the batches a read has
+    not seen with 1 + 3F selects. Entirely DataFrame selects with
+    deterministic arithmetic ids; no driver work."""
     from ..graph.mapper import _SPARK_TO_VRT
 
     def mkid(code: int, c):
@@ -155,44 +195,31 @@ def mapped_parts(batch_df: DataFrame, m: BatchEntityMap, tx: int,
                       f"[0, 2^{ID_KEY_BITS}): "),
                 c.cast("string"))))
 
-    vfrom = F.lit(tx).cast("long")
+    vfrom = F.col("__tx")
     vto = F.lit(None).cast("long")
     k = F.col(m.key_col)
-    # eager bounded probe (LIMIT 1): the graph tables are lazy, so
-    # the in-plan raise_error would only fire at first READ — a bad
-    # key must instead fail the batch NOW, before any ledger mark.
-    # One row crosses the driver, never payload.
-    kl = k.cast("long")
-    bad = batch_df.where(kl.isNull() | (kl < 0)
-                         | (kl >= F.lit(1 << ID_KEY_BITS))) \
-        .select(k).limit(1).take(1)
-    if bad:
-        raise ValueError(
-            f"{batch_label}: key {m.key_col}={bad[0][0]!r} out of "
-            f"[0, 2^{ID_KEY_BITS}) — would alias into a neighboring "
-            "id code band")
     ent_id = mkid(m.type_code, k)
-    node_parts = [batch_df.select(
+    node_parts = [rows.select(
         ent_id.alias("id"), F.lit(m.et).alias("et"),
         F.concat(F.lit(m.uid_prefix), k.cast("string")).alias("uid"),
         vfrom.alias("valid_from_tx"), vto.alias("valid_to_tx"))]
     edge_parts, av_parts = [], []
-    dtypes = dict(batch_df.dtypes)
+    dtypes = dict(rows.dtypes)
     for colname, ae_code in m.fields.items():
         vrt = _SPARK_TO_VRT[dtypes[colname]]
         ae_id = mkid(ae_code, k)
-        node_parts.append(batch_df.select(
+        node_parts.append(rows.select(
             ae_id.alias("id"), F.lit(f"AET.{vrt}").alias("et"),
             F.lit(None).cast("string").alias("uid"),
             vfrom.alias("valid_from_tx"), vto.alias("valid_to_tx")))
-        edge_parts.append(batch_df.select(
+        edge_parts.append(rows.select(
             mkid(ae_code + 1, k).alias("id"),
             F.lit(colname).alias("rt"),
             F.lit(None).cast("string").alias("uid"),
             ent_id.alias("src_id"), ae_id.alias("dst_id"),
             vfrom.alias("valid_from_tx"), vto.alias("valid_to_tx")))
         c = F.col(colname)
-        av_parts.append(batch_df.select(
+        av_parts.append(rows.select(
             ae_id.alias("ae_id"),
             F.lit(colname).alias("attr_rt"),
             F.lit(vrt).alias("vrt"),
@@ -215,16 +242,89 @@ def mapped_parts(batch_df: DataFrame, m: BatchEntityMap, tx: int,
     return node_parts, edge_parts, av_parts
 
 
+def mapped_parts(batch_df: DataFrame, m: BatchEntityMap, tx: int):
+    """``map_rows`` over one batch at ``tx``: the parts
+    ``GraphStore.commit_mapped`` writes. The caller probes the keys
+    first (``_check_keys``)."""
+    return map_rows(_tx_rows(batch_df, m, tx), m)
+
+
+class _Batch(NamedTuple):
+    """An applied batch: its rows, its tx, and its ledger key. Its
+    ledger rows take ids ``base`` + 1, + 2 and + 3."""
+    df: DataFrame
+    tx: int
+    key: str
+    base: int
+
+
+class _State(NamedTuple):
+    """What a mapped sink has applied: the graph it last built, the
+    batches applied since, and the catalog after them. A sink replaces
+    it as one value, so a reader never sees half a batch."""
+    graph: Graph
+    pending: tuple
+    catalog: GraphCatalog
+
+
+def _extend(st: _State, m: BatchEntityMap) -> Graph:
+    """``st.graph`` with ``st.pending`` applied. The pending batches map
+    together (``map_rows`` over one union of their rows; a run of
+    batches with other column types maps apart), and their ledger and
+    tx rows are one local relation per table."""
+    g = st.graph
+    spark = g.spark
+    tables = ([g.nodes], [g.edges], [g.attr_values])
+    cols = list(dict.fromkeys([m.key_col, *m.fields]))
+    for _, run in itertools.groupby(
+            st.pending, lambda b: [dict(b.df.dtypes)[c] for c in cols]):
+        rows = functools.reduce(DataFrame.unionByName,
+                                [_tx_rows(b.df, m, b.tx) for b in run])
+        for parts, new in zip(tables, map_rows(rows, m)):
+            parts.extend(new)
+    # ledger rows: entity + batch_key AE + attr edge + value row, all
+    # at the batch's tx
+    led_nodes, led_edges, led_avs = [], [], []
+    for b in st.pending:
+        ent, ae, edge = b.base + 1, b.base + 2, b.base + 3
+        led_nodes += [(ent, _LedgerSink.LEDGER_ET.name, f"__ledger_{b.key}",
+                       b.tx, None), (ae, "AET.String", None, b.tx, None)]
+        led_edges.append((edge, "batch_key", None, ent, ae, b.tx, None))
+        led_avs.append((ae, "batch_key", "String", b.key, None, None, None,
+                        None, None, None, b.tx, None))
+    for parts, rows, schema in zip(
+            tables, (led_nodes, led_edges, led_avs),
+            (NODES_SCHEMA, EDGES_SCHEMA, ATTR_VALUES_SCHEMA)):
+        parts.append(_local_df(spark, rows, schema))
+    txs = g.txs.unionByName(_local_df(
+        spark, [(b.tx, _tx_time(b.tx)) for b in st.pending], TXS_SCHEMA))
+    out = Graph(*(functools.reduce(DataFrame.unionByName, parts)
+                  for parts in tables), txs, g.tags)
+    out._max_tx = st.pending[-1].tx
+    out._max_rae_id = st.pending[-1].base + 3
+    out.schema_validator = g.schema_validator
+    out.catalog = st.catalog
+    return out
+
+
 class MappedStreamTransactor(_LedgerSink):
     """Distributed foreachBatch sink: one micro-batch == one atomic tx,
     with the PAYLOAD mapped to nodes/edges/attr_values rows entirely
     as DataFrame selects — no driver-side row materialization (the
     wish-based StreamTransactor funnels every row through
     ``batch_df.collect()``; at a high-volume stream that driver hop is
-    the bottleneck, so it is reserved for control-plane volumes). Only
-    the ledger and tx rows are built on the driver, as local relations
+    the bottleneck, so it is reserved for control-plane volumes).
+
+    A batch builds no plan. ``apply_batch`` probes the keys (the
+    batch's one Spark job, ``_check_keys``), mints the tx and the ledger
+    ids, updates the catalog, and records the batch in the sink's
+    ``_State``. ``graph`` builds on the first read after a change: it
+    extends the last built graph with the batches recorded since, all
+    mapped by one ``map_rows`` over the union of their rows, with
+    their ledger and tx rows as local relations
     (``graph.delta._local_df``), so reading the graph back runs no
-    Python worker for any batch.
+    Python worker. The state is replaced as one value per batch, so a
+    reader on another thread (``once=False``) sees whole batches only.
 
     Exactly-once like StreamTransactor: the applied-batch ledger rides
     on the graph as a ZefSparkStreamBatch entity whose node/AE/edge/
@@ -243,65 +343,58 @@ class MappedStreamTransactor(_LedgerSink):
     each value's owner arithmetically from its AE id, with no edge scan
     and no edge join.
 
-    Every ``_CHECKPOINT_EVERY``-th batch localCheckpoints the four
-    tables, so a long-running stream does not accrete an unbounded
-    union lineage."""
+    Every ``_CHECKPOINT_EVERY``-th batch builds the graph and
+    localCheckpoints its four tables, which become the new base, so a
+    long-running stream does not accrete an unbounded union lineage."""
 
     def __init__(self, g: Graph, mapping: BatchEntityMap, stream_id: str):
+        self._lock = threading.Lock()
         super().__init__(g, stream_id)
         self.mapping = mapping
         self._n_applied = 0
+
+    @property
+    def graph(self) -> Graph:
+        """The graph with every applied batch: built once per change."""
+        st = self._state
+        if not st.pending:
+            return st.graph
+        g = _extend(st, self.mapping)
+        with self._lock:
+            if self._state is st:
+                self._state = _State(g, (), st.catalog)
+        return g
+
+    @graph.setter
+    def graph(self, g: Graph) -> None:
+        self._state = _State(g, (), g.catalog)
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> bool:
         key = self._new_key(batch_id)
         if key is None:
             return False
-        g, m = self.graph, self.mapping
-        spark = g.spark
-        tx = g.max_tx() + 1
-        node_parts, edge_parts, av_parts = mapped_parts(
-            batch_df, m, tx, batch_label=str(batch_id))
-
-        # ledger rows, built on the driver as local relations: entity
-        # + batch_key AE + attr edge + value row, all at tx. Their ids
-        # mint above the wish floor AND above the whole payload id
-        # band, so no payload key can ever collide with a ledger row
-        # (codes ≥ 2^(60-K) reach past the 2^60 floor)
-        base = max(g.max_rae_id(), 1 << 60, m.max_payload_id)
-        led_ent, led_ae, led_edge = base + 1, base + 2, base + 3
-        node_parts.append(_local_df(spark, [
-            (led_ent, self.LEDGER_ET.name, f"__ledger_{key}", tx, None),
-            (led_ae, "AET.String", None, tx, None)], NODES_SCHEMA))
-        edge_parts.append(_local_df(spark, [
-            (led_edge, "batch_key", None, led_ent, led_ae, tx, None)],
-            EDGES_SCHEMA))
-        av_parts.append(_local_df(spark, [
-            (led_ae, "batch_key", "String", key, None, None, None,
-             None, None, None, tx, None)], ATTR_VALUES_SCHEMA))
-
-        nodes = g.nodes
-        for p in node_parts:
-            nodes = nodes.unionByName(p)
-        edges = g.edges
-        for p in edge_parts:
-            edges = edges.unionByName(p)
-        avs = g.attr_values
-        for p in av_parts:
-            avs = avs.unionByName(p)
-        txs = g.txs.unionByName(_local_df(spark, [(tx, _tx_time(tx))],
-                                          TXS_SCHEMA))
-        out = Graph(nodes, edges, avs, txs, g.tags)
-        out._max_tx = tx
-        out._max_rae_id = led_edge
-        out.schema_validator = g.schema_validator
-        out.catalog = _mapped_catalog(g.catalog, m, batch_df)
+        m, st = self.mapping, self._state
+        _check_keys(batch_df, m, str(batch_id))
+        if st.pending:
+            tx, floor = st.pending[-1].tx + 1, st.pending[-1].base + 3
+        else:
+            tx, floor = st.graph.max_tx() + 1, st.graph.max_rae_id()
+        # ledger ids mint above the wish floor AND above the whole
+        # payload id band, so no payload key can ever collide with a
+        # ledger row (codes ≥ 2^(60-K) reach past the 2^60 floor)
+        b = _Batch(batch_df, tx, key, max(floor, 1 << 60, m.max_payload_id))
+        cat = _mapped_catalog(st.catalog, m, batch_df)
+        cut = None
+        if (self._n_applied + 1) % _CHECKPOINT_EVERY == 0:
+            cut = _extend(_State(st.graph, st.pending + (b,), cat), m)
+            for t in ("nodes", "edges", "attr_values", "txs"):
+                setattr(cut, t, getattr(cut, t).localCheckpoint())
+        with self._lock:
+            # a reader may have built the pending batches meanwhile
+            cur = self._state
+            self._state = (_State(cut, (), cat) if cut is not None else
+                           _State(cur.graph, cur.pending + (b,), cat))
         self._n_applied += 1
-        if self._n_applied % _CHECKPOINT_EVERY == 0:
-            out.nodes = out.nodes.localCheckpoint()
-            out.edges = out.edges.localCheckpoint()
-            out.attr_values = out.attr_values.localCheckpoint()
-            out.txs = out.txs.localCheckpoint()
-        self.graph = out
         self._applied.add(key)
         return True
 
@@ -357,8 +450,11 @@ def stream_transact_mapped(g: Graph, stream_df: DataFrame,
                            checkpoint: str | None = None):
     """Distributed counterpart of stream_transact: payload rows map to
     graph rows as DataFrame selects (MappedStreamTransactor), never
-    through the driver; every 16th batch cuts the tables' lineage
-    (``_CHECKPOINT_EVERY``). Same return convention."""
+    through the driver. A batch costs one key probe job and builds no
+    plan; the sink's ``graph`` maps every batch it has not seen yet in
+    one pass when it is read, and every 16th batch builds it and cuts
+    the tables' lineage (``_CHECKPOINT_EVERY``). Same return
+    convention."""
     return _run(MappedStreamTransactor(g, mapping, stream_id),
                 stream_df, once, checkpoint)
 
